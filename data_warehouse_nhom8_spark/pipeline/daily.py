@@ -5,6 +5,11 @@ on two servers (extract 02:00 → staging → loadtowh → datamart 08:00),
 the engine runs as one driver function over shared storage: every
 stage ledger-gated, every merge idempotent, so re-running a partially
 failed day continues where it stopped.
+
+A day pays Spark jobs only for its data: extract writes each source's
+rows once, the ledger and the report's row counts are answered on the
+driver (pyarrow over small files and parquet footers), and the
+datamart is one rollup job.
 """
 
 from __future__ import annotations
@@ -15,7 +20,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from data_warehouse_nhom8_spark import schemas
-from data_warehouse_nhom8_spark.sources.snapshots import snapshot_overwrite, snapshot_read
+from data_warehouse_nhom8_spark.sources.snapshots import (
+    snapshot_overwrite,
+    snapshot_read,
+    snapshot_row_count,
+)
 from data_warehouse_nhom8_spark.pipeline.config import EngineConfig
 from data_warehouse_nhom8_spark.pipeline.datamart import rebuild_datamart
 from data_warehouse_nhom8_spark.pipeline.date_dim import build_date_dim
@@ -127,7 +136,8 @@ def run_daily_pipeline(
             ).items()
         }
 
-    # 1. extract (skip-if-done per source inside)
+    # 1. extract (skip-if-done per source inside; the ledger is read
+    # and written on the driver, so its gates and rows start no job)
     report["extract"] = run_all_sources(spark, connectors, day, cfg.bronze_path, ledger)
 
     # 2. staging: day's bronze → typed silver → keyed upsert snapshot
@@ -175,7 +185,8 @@ def run_daily_pipeline(
         n_buckets=n_buckets,
     )
     staging_df = snapshot_read(spark, cfg.staging_path, schemas.STAGING_JOBS)
-    report["staging_rows"] = staging_df.count()
+    # row counts come from the committed files' footers: no re-scan
+    report["staging_rows"] = snapshot_row_count(cfg.staging_path)
 
     # 3. warehouse SCD2 merge (ledger-gated; snapshot persisted BEFORE
     # the Success row so a crash can't strand a done-but-unwritten day)
@@ -213,9 +224,10 @@ def run_daily_pipeline(
         keep_norm_keys=keep_nk,
     )
     wh = snapshot_read(spark, cfg.warehouse_path)
-    report["warehouse_rows"] = wh.count()
+    report["warehouse_rows"] = snapshot_row_count(cfg.warehouse_path)
 
-    # 4. datamart over live rows
+    # 4. datamart over live rows: one rollup job, tables swapped in
+    # only once every one of them is written
     live = wh.filter(F.col("expired") == F.lit("9999-12-31").cast("date"))
     if doctor_self:
         report.setdefault("doctor", {}).update(

@@ -5,13 +5,22 @@ for each, DROPs + recreates one 2-column table
 `(group_col, total_jobs)` via `SELECT {k}, COUNT(*) FROM job GROUP BY
 {k}` (reference datamart/load_to_dm.py:104-173).
 
-Engine: the same spec list drives either N independent aggregates
-(each a trivial plan) or ONE shared-scan GROUPING SETS plan — at
-100 TB the shared scan reads the fact once instead of N times.
+Engine: the same spec list drives ONE shared-scan GROUPING SETS plan
+(`_rollup`) — at 100 TB the shared scan reads the fact once instead of
+N times. `rebuild_datamart` runs that rollup as the day's one datamart
+job and fetches it to the driver: its rows are the groups of every
+table, the same rows `serve_datamart` already pulls whole into pandas.
+The driver splits them per table, writes each table as one parquet
+file into a hidden staging directory, and swaps the tables into place
+only after all of them are written, so a failed rebuild leaves the
+previous datamart readable.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -42,30 +51,36 @@ def build_aggregate(fact: DataFrame, spec: AggSpec) -> DataFrame:
     )
 
 
-def build_all_shared_scan(fact: DataFrame, specs: tuple[AggSpec, ...] = DEFAULT_SPECS) -> dict[str, DataFrame]:
-    """All aggregates from ONE scan via grouping sets + grouping_id,
-    split back into per-table DataFrames. Spark plans a single Expand,
-    so the fact is read once."""
-    keys = [s.group_by for s in specs]
-    sets = ", ".join(f"({k})" for k in keys)
-    fact.createOrReplaceTempView("__dm_fact")
-    wide = fact.sparkSession.sql(
+def _rollup(fact: DataFrame, specs: tuple[AggSpec, ...]) -> DataFrame:
+    """Every spec's groups from ONE scan: GROUPING SETS tagged with a
+    grouping id (`gid`). Spark plans a single Expand, so the fact is
+    read once."""
+    keys = ", ".join(s.group_by for s in specs)
+    sets = ", ".join(f"({s.group_by})" for s in specs)
+    return fact.sparkSession.sql(
         f"""
-        SELECT {', '.join(keys)}, GROUPING_ID({', '.join(keys)}) AS gid,
-               COUNT(*) AS total
-        FROM __dm_fact GROUP BY GROUPING SETS ({sets})
-        """
+        SELECT {keys}, GROUPING_ID({keys}) AS gid, COUNT(*) AS total
+        FROM {{fact}} GROUP BY GROUPING SETS ({sets})
+        """,
+        fact=fact,
     )
-    out: dict[str, DataFrame] = {}
-    n = len(keys)
-    for i, s in enumerate(specs):
-        # gid bit pattern: all keys aggregated except key i
-        gid = (2**n - 1) ^ (2 ** (n - 1 - i))
-        out[s.table_name] = (
-            wide.filter(F.col("gid") == gid)
-            .select(F.col(s.group_by), F.col("total").alias(s.count_alias))
+
+
+def _gid(i: int, n: int) -> int:
+    """The `gid` of spec i of n: every key aggregated away but key i."""
+    return (2**n - 1) ^ (2 ** (n - 1 - i))
+
+
+def build_all_shared_scan(fact: DataFrame, specs: tuple[AggSpec, ...] = DEFAULT_SPECS) -> dict[str, DataFrame]:
+    """All aggregates from ONE scan (`_rollup`), split back into
+    per-table DataFrames."""
+    wide = _rollup(fact, specs)
+    return {
+        s.table_name: wide.filter(F.col("gid") == _gid(i, len(specs))).select(
+            F.col(s.group_by), F.col("total").alias(s.count_alias)
         )
-    return out
+        for i, s in enumerate(specs)
+    }
 
 
 def apply_change_feed(
@@ -135,39 +150,35 @@ def rebuild_datamart(
     fact: DataFrame,
     out_dir: str,
     specs: tuple[AggSpec, ...] = DEFAULT_SPECS,
-    shared_scan: bool = True,
 ) -> dict[str, int]:
-    """Drop-and-recreate each aggregate table (S8: overwrite) and
-    return row counts for the run ledger."""
-    spark = fact.sparkSession
-    if shared_scan:
-        # materialize the one Expand pass, then split the (tiny) wide
-        # result — without this each per-table filter re-runs the full
-        # fact scan, defeating the shared-scan design
-        keys = [s.group_by for s in specs]
-        sets = ", ".join(f"({k})" for k in keys)
-        fact.createOrReplaceTempView("__dm_fact")
-        spark.sql(
-            f"""
-            SELECT {', '.join(keys)}, GROUPING_ID({', '.join(keys)}) AS gid,
-                   COUNT(*) AS total
-            FROM __dm_fact GROUP BY GROUPING SETS ({sets})
-            """
-        ).write.mode("overwrite").parquet(f"{out_dir}/_shared_rollup")
-        wide = spark.read.parquet(f"{out_dir}/_shared_rollup")
-        n = len(keys)
-        tables = {}
-        for i, s in enumerate(specs):
-            gid = (2**n - 1) ^ (2 ** (n - 1 - i))
-            tables[s.table_name] = wide.filter(F.col("gid") == gid).select(
-                F.col(s.group_by), F.col("total").alias(s.count_alias)
-            )
-    else:
-        tables = {s.table_name: build_aggregate(fact, s) for s in specs}
+    """Drop-and-recreate each aggregate table (S8: overwrite) from one
+    rollup job, and return row counts for the run ledger.
 
+    Every table is written as one pyarrow file into a hidden directory
+    under `out_dir` first; only then is each table directory swapped
+    in by rename. A write that fails leaves every previous table in
+    place."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    wide = _rollup(fact, specs).toArrow()  # bounded-collect: Σ group counts of the specs
+    os.makedirs(out_dir, exist_ok=True)
+    stage = os.path.join(out_dir, f".rebuild-{uuid.uuid4().hex}")
     counts: dict[str, int] = {}
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}")
-        # count the written output (tiny) instead of re-running the plan
-        counts[name] = spark.read.parquet(f"{out_dir}/{name}").count()
+    try:
+        for i, s in enumerate(specs):
+            t = wide.filter(pc.equal(wide["gid"], _gid(i, len(specs))))
+            t = t.select([s.group_by, "total"]).rename_columns([s.group_by, s.count_alias])
+            os.makedirs(os.path.join(stage, s.table_name))
+            pq.write_table(t, os.path.join(stage, s.table_name, "part-00000.parquet"))
+            counts[s.table_name] = t.num_rows
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    for s in specs:
+        live = os.path.join(out_dir, s.table_name)
+        if os.path.exists(live):
+            os.rename(live, os.path.join(stage, f".old-{s.table_name}"))
+        os.rename(os.path.join(stage, s.table_name), live)
+    shutil.rmtree(stage)
     return counts

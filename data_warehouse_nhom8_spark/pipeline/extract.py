@@ -13,7 +13,7 @@ schema evolution by projection, SURVEY §1).
 
 The engine replaces the shell CSV concat with the multi-file scan
 (U1 = implicit union of the partition directory), and the
-skip-if-done complement with the ledger's left-anti `runnable` (U2).
+skip-if-done complement with the ledger's driver-side `is_done` gate (U2).
 """
 
 from __future__ import annotations
@@ -52,15 +52,19 @@ def ingest_source(
     try:
         rows = connector(source_id, run_date)
         cols = [f.name for f in schemas.RAW_JOBS_CSV.fields]
-        normalized = [{c: r.get(c) for c in cols} for r in rows]
-        df = spark.createDataFrame(normalized, schemas.RAW_JOBS_CSV)
-        df = df.filter(
-            F.col("job_id").isNotNull() & (F.trim("job_id") != "")
-            & F.col("job_title").isNotNull() & (F.trim("job_title") != "")
-        ).withColumn("source", F.lit(source_id)).withColumn(
-            "date", F.lit(run_date.isoformat())
+        # the validity filter runs here, on the rows in hand, so the
+        # write is the plan's only execution and `n` needs no count job
+        kept = [
+            {c: r.get(c) for c in cols}
+            for r in rows
+            if _present(r.get("job_id")) and _present(r.get("job_title"))
+        ]
+        n = len(kept)
+        df = (
+            spark.createDataFrame(kept, schemas.RAW_JOBS_CSV)
+            .withColumn("source", F.lit(source_id))
+            .withColumn("date", F.lit(run_date.isoformat()))
         )
-        n = df.count()
         write_partitioned_csv(df, bronze_path)
         if ledger:
             ledger.close_run(
@@ -77,6 +81,12 @@ def ingest_source(
         raise
 
 
+def _present(v: str | None) -> bool:
+    """Spark's `isNotNull() & trim(v) != ''`: `trim` strips only the
+    space U+0020, so tabs, newlines and other blanks keep a value."""
+    return v is not None and v.strip(" ") != ""
+
+
 def run_all_sources(
     spark: SparkSession,
     connectors: dict[str, Connector],
@@ -85,18 +95,12 @@ def run_all_sources(
     ledger: RunLedger,
 ) -> dict[str, int]:
     """The master runner (run_all_scrapers.sh): enabled sources minus
-    already-succeeded-today (U2 left-anti via the ledger), each
-    ingested independently; failures don't stop later sources."""
-    enabled = spark.createDataFrame(
-        [(f"extract_{s}",) for s in connectors], "process string"
-    )
-    todo = {
-        r["process"].removeprefix("extract_")
-        for r in ledger.runnable(enabled, run_date).collect()
-    }
+    already-succeeded-today (U2: the ledger's skip-if-done gate per
+    source), each ingested independently; failures don't stop later
+    sources."""
     results: dict[str, int] = {}
     for source_id, conn in connectors.items():
-        if source_id not in todo:
+        if ledger.is_done(f"extract_{source_id}", run_date):
             continue
         try:
             results[source_id] = ingest_source(

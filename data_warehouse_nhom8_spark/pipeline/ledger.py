@@ -6,10 +6,29 @@ open a Running row, do work, close Success/Failed; wrappers consult
 the ledger (not exit codes) for skip-if-done and retry decisions
 (reference extract/run_topcv_scraper_with_retry.sh:52-59,186-196).
 
-Here: one parquet table, append-only; status-of-record is the latest
-row per (process, run_date) by log_id. Reads are tiny (control plane),
-writes are appends — safe at any scale because the ledger grows with
-runs, not data.
+Here: one directory of parquet files, append-only; status-of-record is
+the latest row per (process, run_date) by log_id. The ledger grows with
+runs, not data, so the driver owns it:
+
+* every `open_run`/`close_run` writes ONE small parquet file with
+  pyarrow under a hidden name, then `os.replace`s it into place — a
+  reader never sees a partial file, and a crashed append leaves only a
+  hidden file every reader skips (Spark and `_files` alike ignore
+  `.`/`_` names). File names carry a random suffix, so concurrent
+  writers never collide. Nothing here starts a Spark job;
+* the skip-if-done gates (`is_done`, `runnable`) read the directory on
+  the driver with pyarrow;
+* the monitoring views and `latest_status` read it with Spark
+  (`_read`), so files written by the older Spark appends and the
+  pyarrow files read back as one table with the `RUN_LEDGER` schema;
+* `prune` compacts the kept rows into one file through the same writer.
+
+Timestamps are stored as UTC instants, exactly what Spark's
+`createDataFrame` stores for them: a naive datetime is local time to
+both (pyarrow alone would take it as UTC, so `_fill` converts first).
+pyarrow is imported inside the functions: the import takes ~0.4 s (a
+4-core VM), which a process that never touches the ledger should not
+pay.
 """
 
 from __future__ import annotations
@@ -17,6 +36,7 @@ from __future__ import annotations
 import datetime
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,15 +51,64 @@ class RunLedger:
         self.path = path
 
     def _read(self) -> DataFrame:
-        if not _exists(self.path):
+        if not self._files():
             return self.spark.createDataFrame([], schemas.RUN_LEDGER)
         return self.spark.read.schema(schemas.RUN_LEDGER).parquet(self.path)
 
     def _append(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [_fill(r) for r in rows], schemas.RUN_LEDGER
+        import pyarrow as pa
+
+        self._write(pa.Table.from_pylist([_fill(r) for r in rows], schema=_arrow_schema()))
+
+    def _write(self, table) -> None:
+        """Commit `table` as one new visible file: write it under a
+        hidden name, then rename it into place."""
+        import pyarrow.parquet as pq
+
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{time.time_ns()}-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
+
+    def _files(self) -> list[str]:
+        """The committed ledger files: hidden (in-flight or crashed
+        appends) and `_`-prefixed names are skipped, as Spark does."""
+        try:
+            names = os.listdir(self.path)
+        except FileNotFoundError:
+            return []
+        return sorted(
+            os.path.join(self.path, n)
+            for n in names
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
         )
-        df.write.mode("append").parquet(self.path)
+
+    def _read_arrow(self, files: list[str], columns: list[str] | None = None):
+        """`files` read on the driver as one pyarrow table with the
+        `RUN_LEDGER` types (Spark's INT96 timestamps included)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = _arrow_schema()
+        schema = pa.schema([schema.field(c) for c in columns or schema.names])
+        parts = [
+            pq.ParquetFile(f).read(columns=schema.names).select(schema.names).cast(schema)
+            for f in files
+        ]
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
+    def _succeeded(self, run_date: datetime.date) -> set[str]:
+        """Processes with a Success row for `run_date`."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = self._read_arrow(self._files(), ["process", "run_date", "status"])
+        hit = pc.and_(
+            pc.equal(t["run_date"], pa.scalar(run_date, pa.date32())),
+            pc.equal(t["status"], "Success"),
+        )
+        return set(t.filter(hit)["process"].to_pylist())
 
     def open_run(self, process: str, run_date: datetime.date) -> int:
         """Insert a Running row; returns its log_id.
@@ -107,18 +176,8 @@ class RunLedger:
     def is_done(self, process: str, run_date: datetime.date) -> bool:
         """Skip-if-done gate: any Success for (process, run_date)
         (reference run_topcv_scraper_with_retry.sh:52-59 — COUNT > 0,
-        not latest-row)."""
-        n = (
-            self._read()
-            .filter(
-                (F.col("process") == process)
-                & (F.col("run_date") == F.lit(run_date))
-                & (F.col("status") == "Success")
-            )
-            .limit(1)
-            .count()
-        )
-        return n > 0
+        not latest-row). Read on the driver: no Spark job."""
+        return process in self._succeeded(run_date)
 
     def success_rate_view(self) -> DataFrame:
         """Per-process health rollup — the v_scraper_stats monitoring
@@ -218,28 +277,43 @@ class RunLedger:
 
     def prune(self, keep_days: int, today: datetime.date | None = None) -> int:
         """Retention sweep — the 30-day log cleanup (reference
-        extract/cleanup_old_logs.sh:11): rewrite the ledger keeping
-        only rows newer than `keep_days`. Returns rows kept."""
-        from data_warehouse_nhom8_spark.sources.snapshots import safe_overwrite
+        extract/cleanup_old_logs.sh:11): compact the ledger into ONE
+        file of the rows newer than `keep_days`. Returns rows kept.
+
+        The compacted file commits before the files it replaces are
+        removed, so a crash in between leaves duplicate kept rows —
+        harmless to the gates and `latest_status` — and never loses
+        one; an append that lands during the prune is not among the
+        files removed."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         today = today or datetime.date.today()
         cutoff = today - datetime.timedelta(days=keep_days)
-        kept = self._read().filter(F.col("run_date") >= F.lit(cutoff))
-        return safe_overwrite(kept, self.path, schemas.RUN_LEDGER)
+        files = self._files()
+        t = self._read_arrow(files)
+        kept = t.filter(pc.greater_equal(t["run_date"], pa.scalar(cutoff, pa.date32())))
+        self._write(kept)
+        for f in files:
+            os.remove(f)
+        return kept.num_rows
 
     def runnable(self, enabled: DataFrame, run_date: datetime.date) -> DataFrame:
         """U2: enabled processes minus already-succeeded-today
         (reference run_all_scrapers.sh:22-44) as a left-anti join.
-        `enabled` must have a `process` column."""
-        done = (
-            self._read()
-            .filter((F.col("run_date") == F.lit(run_date)) & (F.col("status") == "Success"))
-            .select("process")
+        `enabled` must have a `process` column. The done set is read on
+        the driver."""
+        done = self.spark.createDataFrame(
+            [(p,) for p in self._succeeded(run_date)], "process string"
         )
         return enabled.join(done, on="process", how="left_anti")
 
 
-from data_warehouse_nhom8_spark.sources.snapshots import has_parquet as _exists  # noqa: E402
+def _arrow_schema():
+    """`schemas.RUN_LEDGER` as pyarrow types (timestamps UTC micros)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(schemas.RUN_LEDGER)
 
 
 def _fill(r: dict) -> dict:
@@ -256,4 +330,8 @@ def _fill(r: dict) -> dict:
         "error_message": None,
     }
     base.update(r)
+    for k in ("start_time", "end_time"):
+        if base[k] is not None:
+            # naive = local time, as Spark's createDataFrame reads it
+            base[k] = base[k].astimezone(datetime.timezone.utc)
     return base

@@ -28,9 +28,9 @@ version never loses its files mid-scan).
 
 At 100 TB this is exactly the layout a table format (Iceberg/Delta)
 formalizes; the pointer swap is the commit, the version dirs are the
-snapshots. ``safe_overwrite`` (driver-side materialize-then-rewrite)
-remains ONLY for control-plane tables whose whole content is
-increment-scale (the run ledger).
+snapshots. The one control-plane table, the run ledger, is written on
+the driver instead (`pipeline.ledger`): its content grows with runs,
+not data.
 """
 
 from __future__ import annotations
@@ -208,6 +208,24 @@ def snapshot_read(
         r = spark.read.schema(schema) if schema is not None else spark.read
         return r.parquet(path)
     return None
+
+
+def snapshot_row_count(path: str) -> int:
+    """Rows of the live committed version, summed from its parquet
+    footers — metadata reads on the driver, no Spark job. Counts the
+    files `snapshot_read` scans (a legacy plain dir's own files); 0
+    when nothing is committed."""
+    import pyarrow.parquet as pq
+
+    v = _current_version(path)
+    target = os.path.join(path, f"v{v:08d}") if v is not None else path
+    if not os.path.isdir(target):
+        return 0
+    return sum(
+        pq.ParquetFile(os.path.join(target, n)).metadata.num_rows
+        for n in os.listdir(target)
+        if n.endswith(".parquet")
+    )
 
 
 def snapshot_diff(
@@ -657,19 +675,6 @@ def _gc_versions(
                     f"DROP TABLE IF EXISTS {_bucket_table_name(path, int(m.group(1)))}"
                 )
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-
-
-def safe_overwrite(df: DataFrame, path: str, schema: T.StructType | None = None) -> int:
-    """CONTROL-PLANE ONLY (run ledger): materialize `df` on the
-    driver, then overwrite `path` in place as plain parquet. Bounded
-    by the ledger's increment-scale row count — never use for data
-    tables; those go through `snapshot_overwrite` (distributed,
-    atomic, no driver materialization)."""
-    spark = df.sparkSession
-    rows = df.collect()
-    out = spark.createDataFrame(rows, schema or df.schema)
-    out.write.mode("overwrite").parquet(path)
-    return len(rows)
 
 
 def snapshot_delete_keys(
