@@ -829,8 +829,11 @@ _SPANS_BROADCAST_MAX_CORPUS_BYTES = 256 * 1024 * 1024
 def _input_bytes(df: DataFrame) -> int:
     import os as _os
 
+    files = df.inputFiles()
+    if not files:
+        return 1 << 62  # in-memory input: size unknown — treat as over-bound
     total = 0
-    for f in df.inputFiles():
+    for f in files:
         try:
             total += _os.path.getsize(f.replace("file:", "", 1))
         except OSError:

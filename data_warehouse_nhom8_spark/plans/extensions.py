@@ -28,6 +28,7 @@ from data_warehouse_nhom8_spark.operators.text import (
 )
 from data_warehouse_nhom8_spark.sources import Catalog
 from data_warehouse_nhom8_spark.regexes import WS_SPLIT
+from data_warehouse_nhom8_spark.session import _dir_bytes
 
 
 # Cross-query memo (round-1 verdict #3: q49 re-ran q38's entire
@@ -707,17 +708,6 @@ def _shared_corpus_sig_store(
 # hold the sets tier resident below this on-disk size; beyond it the
 # incremental probe uses the pruned scan (file-skipping) instead
 _SETS_CACHE_MAX_BYTES = 256 * 1024 * 1024
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
 
 
 def prefit_stores(spark: SparkSession, sf_dir: str) -> dict:

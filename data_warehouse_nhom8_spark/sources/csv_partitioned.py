@@ -24,12 +24,17 @@ def write_partitioned_csv(
     partition_cols: tuple[str, ...] = ("source", "date"),
     mode: str = "append",
 ) -> None:
-    """Partitioned CSV sink with header, UTF-8 (S2)."""
+    """Partitioned CSV sink with header, UTF-8 (S2). Values are written
+    as they are: Spark's CSV writer trims leading/trailing whitespace
+    by default, which would turn a kept value such as a tab into an
+    empty field that reads back as NULL."""
     (
         df.write.mode(mode)
         .partitionBy(*partition_cols)
         .option("header", "true")
         .option("encoding", "UTF-8")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
         .csv(path)
     )
 

@@ -20,6 +20,40 @@ micro-batches; the upsert sink is idempotent by key, so replays
 converge — the same contract the reference gets from its skip-if-done
 ledger + UNIQUE key.
 
+Epoch-append stores (round 12). Twelve persisted stores — near-dup
+state and pairs, sketch, vocab, corpus, chunks, freq, span, URL, IVF,
+SimHash signatures and the cluster map — share one set of storage
+mechanics, written once in this module; each store's face keeps only
+its batch transform, its fold and its read shape.
+
+  sink      `_foreach_batch_sink` registers the sink's checkpoint as
+            each store's writer (`snapshots.register_store_checkpoint`
+            — the handle the offline guard resolves to a live query)
+            and wires foreachBatch.
+  append    `_append_epoch` commits a micro-batch's rows as THAT
+            epoch's file set (`snapshots.epoch_append`): O(batch)
+            merge I/O, the store is never rewritten on the hot path
+            (a read→union→overwrite merge is O(store) per epoch). A
+            replayed micro-batch REPLACES its own epoch's files, so
+            additive counts stay exact and the at-least-once file
+            source is effectively exactly-once. Rows carry a
+            storage `epoch` column stamped with the ON-DISK id (stream
+            id + re-registration rebase, `snapshots.on_disk_epoch`),
+            so last-writer-wins `desc(epoch)` agrees with the log.
+  read      `_committed` returns base ∪ epochs — or the split
+            last-writer-wins read `_lww_read`, where a later epoch
+            beats an earlier one (the old incoming-beats-current
+            upsert) — and raises FileNotFoundError on an empty store.
+            The storage `epoch` column is dropped by LWW reads.
+  compact   `compact_*` fold base + epochs into a new BASE version
+            whose rows carry `epoch = -1` (`_as_base`), which every
+            live epoch beats. OFFLINE only, with the stream stopped at
+            a committed checkpoint: a replayed batch could not replace
+            rows the fold moved into the base; after a clean stop
+            there is nothing to replay, and the restarted stream's
+            epochs never collide with -1. `snapshots.epoch_compact`
+            enforces it mechanically.
+
 Scale: stateful aggs keep per-window per-key state in the state
 store; the watermark bounds state size. Shuffle partition count =
 state store shard count — size it for the key cardinality, not the
@@ -31,12 +65,24 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from data_warehouse_nhom8_spark.operators.dedup import upsert_last_writer_wins
+from data_warehouse_nhom8_spark.sources.snapshots import (
+    assert_stamp_format,
+    epoch_append,
+    epoch_compact,
+    epoch_read,
+    epoch_read_parts,
+    epoch_tail_bytes,
+    on_disk_epoch,
+    register_store_checkpoint,
+    snapshot_overwrite,
+    snapshot_read,
+)
 
 
 def stream_source(
@@ -173,6 +219,163 @@ def lint_microbatch(
     return findings
 
 
+# ------------------------------------------------- epoch-store mechanics
+
+
+def _foreach_batch_sink(
+    stream: DataFrame, checkpoint: str, merge, *store_paths: str
+) -> DataStreamWriter:
+    """The foreachBatch writer every sink returns, after registering
+    `checkpoint` as the writer of each epoch store in `store_paths`."""
+    for path in store_paths:
+        register_store_checkpoint(path, checkpoint)
+    return (
+        stream.writeStream.foreachBatch(merge)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+    )
+
+
+def _append_epoch(df: DataFrame, path: str, epoch_id: int) -> None:
+    """Commit `df` as writer-stream epoch `epoch_id` of the store at
+    `path`, its rows stamped with the on-disk epoch id."""
+    stamp = F.lit(on_disk_epoch(path, epoch_id)).cast("long")
+    epoch_append(df.withColumn("epoch", stamp), path, epoch_id)
+
+
+def _committed(
+    spark: SparkSession, path: str, sink: str, lww=None
+) -> DataFrame:
+    """The committed store at `path`: base ∪ epochs, or the split LWW
+    read when `lww` is a store's (keys, tiebreak) — raising
+    FileNotFoundError that names `sink` when nothing is committed."""
+    if lww is None:
+        store = epoch_read(spark, path)
+    else:
+        keys, tiebreak = lww
+        store = _lww_read(spark, path, keys, [F.desc(c) for c in tiebreak])
+    if store is None:
+        raise FileNotFoundError(
+            f"no committed store at {path}; run {sink} through at least "
+            "one micro-batch first"
+        )
+    return store
+
+
+def _as_base(fold):
+    """A compaction fold: `fold`, then the base version's `epoch = -1`
+    stamp."""
+    return lambda store: fold(store).withColumn("epoch", F.lit(-1).cast("long"))
+
+
+def _sum_fold(key: str, col: str):
+    """Fold of an additive store: `col` summed per `key` (count
+    addition is associative, so folding epochs changes no read)."""
+    return lambda store: store.groupBy(key).agg(F.sum(col).cast("long").alias(col))
+
+
+def _lww_fold(keys: Sequence[str], tiebreak: Sequence[str]):
+    """Fold of a last-writer-wins store: one winner per key."""
+    return lambda store: _lww_resolve(store, keys, [F.desc(c) for c in tiebreak])
+
+
+# last-writer-wins stores: (keys, columns breaking ties within an
+# epoch, descending)
+_PAIRS_LWW = (["id_a", "id_b"], ["jaccard"])
+_CORPUS_LWW = (["doc_id"], ["n_tokens"])
+_CHUNKS_LWW = (["doc_id", "chunk_id"], ["chunk_fp"])
+_SIMHASH_LWW = (["id"], ["sh"])
+# additive stores: (key, count column)
+_VOCAB_SUM = ("token", "n")
+_SPAN_SUM = ("h", "n_docs")
+
+
+def _first_seen(rows: DataFrame, path: str, key: str, epoch_id: int) -> DataFrame:
+    """`rows` whose `key` no earlier epoch of the store admitted — the
+    first-seen merge of the URL and IVF registries. The replaying
+    epoch's own files are excluded, so a replay recomputes its delta
+    without its previous attempt poisoning the anti-join.
+
+    SPLIT anti-join (round 12): anti vs the base and the epoch tail
+    separately — unioning a bucketed base with plain epoch files would
+    erase its distribution and shuffle the whole registry every batch;
+    sequentially, the base stays put (batch-sized shuffle onto its
+    buckets) and the epoch tail (bounded by compaction cadence) joins
+    broadcast-sized. Anti against A∪B ≡ anti A then anti B."""
+    for part in epoch_read_parts(rows.sparkSession, path, exclude_epoch=epoch_id):
+        if part is not None:
+            rows = rows.join(part.select(key), key, "left_anti")
+    return rows
+
+
+# forced-broadcast ceiling for the live epoch tail's key set (on-disk
+# parquet bytes of the full tail — the key projection is smaller, so
+# this is conservative). 64 MiB compressed ≈ low-hundreds-MB in-memory
+# hash relation: comfortably executor/driver-safe at local and
+# cluster defaults, far above any on-cadence compaction tail.
+_TAIL_BROADCAST_MAX_BYTES = 64 << 20
+
+
+def _lww_resolve(store: DataFrame, keys: Sequence[str], tiebreak) -> DataFrame:
+    """Winner per key across epochs: later epoch beats earlier (the
+    old upsert's incoming-beats-current), `tiebreak` orders within an
+    epoch. Drops the storage-only epoch column so readers see exactly
+    the batch pipeline's schema."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys).orderBy(F.desc("epoch"), *tiebreak)
+    return (
+        store.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "epoch")
+    )
+
+
+def _lww_read(
+    spark: SparkSession,
+    path: str,
+    keys: Sequence[str],
+    tiebreak,
+    exclude_epoch: int | None = None,
+) -> DataFrame | None:
+    """SPLIT last-writer-wins read (round 12): a window over
+    base ∪ epochs shuffles the whole store per read; instead the
+    BASE is by construction already resolved to one row per key
+    (every base commit goes through the resolve fold, tagged
+    epoch = -1, which every live epoch ≥ 0 beats), so the read is
+      base rows whose key has NO live-epoch row   (broadcast anti —
+                                                   the base never
+                                                   shuffles)
+      ∪ the live-epoch tail resolved on its own   (window over the
+                                                   compaction-bounded
+                                                   tail only).
+    Identical output to resolving the union (pytest-gated by every
+    stream==batch equality test); O(base scan + tail window) instead
+    of O(store shuffle) at 100 TB."""
+    # r14 tripwire: refuse a rebased store whose live rows may carry
+    # pre-fix RAW epoch stamps (they'd silently lose every resolve
+    # below) — metadata-only check, repair = snapshots.epoch_restamp
+    assert_stamp_format(path)
+    base, tail = epoch_read_parts(spark, path, exclude_epoch=exclude_epoch)
+    if base is None and tail is None:
+        return None
+    if tail is None:
+        return base.drop("epoch")
+    tail_w = _lww_resolve(tail, keys, tiebreak)
+    if base is None:
+        return tail_w
+    tail_keys = tail.select(*keys).distinct()
+    # Broadcast only when the tail's on-disk bytes say it is small:
+    # the tail is bounded by compaction CADENCE, not by size, and a
+    # forced F.broadcast bypasses autoBroadcastJoinThreshold — a
+    # lagging compaction must degrade to a shuffled anti join (slow,
+    # base loses co-location for that read), never OOM the driver.
+    if epoch_tail_bytes(path, exclude_epoch) <= _TAIL_BROADCAST_MAX_BYTES:
+        tail_keys = F.broadcast(tail_keys)
+    keep = base.join(tail_keys, list(keys), "left_anti").drop("epoch")
+    return keep.unionByName(tail_w)
+
+
 def upsert_sink(
     stream: DataFrame,
     snapshot_path: str,
@@ -207,13 +410,7 @@ def upsert_sink(
     """
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            snapshot_overwrite,
-            snapshot_read,
-        )
-
-        spark = batch.sparkSession
-        current = snapshot_read(spark, snapshot_path)
+        current = snapshot_read(batch.sparkSession, snapshot_path)
         order_by = [F.desc(c) for c in order_by_cols]
         merged = upsert_last_writer_wins(current, batch, keys, order_by)
         if doctor_name:
@@ -230,11 +427,7 @@ def upsert_sink(
         # driver materialization — see sources.snapshots
         snapshot_overwrite(merged, snapshot_path)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch_sink(stream, checkpoint, merge)
 
 
 _HIVE_DEFAULT_PART = "__HIVE_DEFAULT_PARTITION__"
@@ -334,21 +527,11 @@ def upsert_sink_partitioned(
     Replay-idempotent: a re-run micro-batch re-merges the same keys
     into the same partitions and overwrites the same directories —
     the at-least-once file source converges, same as `upsert_sink`."""
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
     ptype = stream.schema[partition_col].dataType
     if not isinstance(
         ptype,
-        (StringType, IntegerType, LongType, ShortType, ByteType, DateType,
-         BooleanType),
+        (T.StringType, T.IntegerType, T.LongType, T.ShortType, T.ByteType,
+         T.DateType, T.BooleanType),
     ):
         raise TypeError(
             f"upsert_sink_partitioned: partition column {partition_col!r} "
@@ -416,24 +599,7 @@ def upsert_sink_partitioned(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-
-
-def _register_epoch_stores(checkpoint: str, *store_paths: str) -> None:
-    """Stamp the sink's checkpoint into each store it writes
-    (`snapshots.register_store_checkpoint`) so the epoch folds'
-    offline guard can mechanically see whether the writer stream is
-    still live — the contract used to be docstring-only."""
-    from data_warehouse_nhom8_spark.sources.snapshots import (
-        register_store_checkpoint,
-    )
-
-    for path in store_paths:
-        register_store_checkpoint(path, checkpoint)
+    return _foreach_batch_sink(stream, checkpoint, merge)
 
 
 def neardup_ingest_sink(
@@ -451,32 +617,19 @@ def neardup_ingest_sink(
     foreachBatch upsert: every micro-batch of documents is
     incrementally deduped against the persisted (id, sig, h64)
     signature state (operators.neardup.minhash_incremental_with_state
-    — only the batch is shingled/signatured), newly found pairs merge
-    into the pairs snapshot keyed by (id_a, id_b), and the state
-    advances atomically. Feeding batches one at a time produces
-    exactly the full batch detector's pair set (pytest-gated), and
-    replays converge: a re-run micro-batch replaces its own epoch's
-    file sets in BOTH stores (epoch-append commits — round 12: the
-    old merges rewrote the full signature state AND the full pair
-    table per micro-batch, O(corpus) I/O on the hot path; now only
-    the batch's state rows and the batch's pairs land as that
-    epoch's files). Reads go through `read_sig_state` /
-    `read_neardup_pairs`, which resolve last-writer-wins per key
-    across epochs (later epoch beats earlier — exactly the old
-    incoming-beats-current upsert). Assumes an append-only corpus
-    (the LLM-ingest shape): re-ingesting a CHANGED text under an
-    existing id updates its state row but does not retract pairs the
-    old text produced."""
+    — only the batch is shingled/signatured); the batch's state rows
+    and its newly found pairs land as that epoch's files in the two
+    stores. Feeding batches one at a time produces exactly the full
+    batch detector's pair set (pytest-gated). Reads go through `read_sig_state` /
+    `read_neardup_pairs`, last-writer-wins per key. Assumes an
+    append-only corpus (the LLM-ingest shape): re-ingesting a CHANGED
+    text under an existing id updates its state row but does not
+    retract pairs the old text produced."""
     from data_warehouse_nhom8_spark.operators.neardup import (
         minhash_incremental_with_state,
     )
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            on_disk_epoch,
-        )
-
         spark = batch.sparkSession
         store = read_sig_state(spark, state_path, exclude_epoch=epoch_id)
         pairs, new_store = minhash_incremental_with_state(
@@ -493,29 +646,13 @@ def neardup_ingest_sink(
         # join on the batch's ids selects exactly the batch's rows —
         # the WRITE is batch-sized (the store is only ever read)
         batch_ids = batch.select(F.col("doc_id").alias("id")).distinct()
-        # stamps carry the ON-DISK id (stream id + any re-registration
-        # rebase, per store) so LWW desc(epoch) agrees with the log
-        delta = new_store.join(batch_ids, "id", "left_semi").withColumn(
-            "epoch", F.lit(on_disk_epoch(state_path, epoch_id)).cast("long")
-        )
         # state first: a crash between the two appends re-runs the
         # micro-batch (at-least-once), and both appends replace their
         # own epoch's files — idempotent either way
-        epoch_append(delta, state_path, epoch_id)
-        epoch_append(
-            pairs.withColumn(
-                "epoch", F.lit(on_disk_epoch(pairs_path, epoch_id)).cast("long")
-            ),
-            pairs_path,
-            epoch_id,
-        )
+        _append_epoch(new_store.join(batch_ids, "id", "left_semi"), state_path, epoch_id)
+        _append_epoch(pairs, pairs_path, epoch_id)
 
-    _register_epoch_stores(checkpoint, state_path, pairs_path)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch_sink(stream, checkpoint, merge, state_path, pairs_path)
 
 
 def read_sig_state(
@@ -523,23 +660,15 @@ def read_sig_state(
 ) -> DataFrame | None:
     """(id, sig, h64) — the near-dup signature state, last-writer-wins
     resolved per id across epochs (re-ingested ids take their newest
-    epoch's row). None when nothing is committed yet. The epoch
-    column is storage-internal and dropped here."""
+    epoch's row). None when nothing is committed yet."""
     return _lww_read(spark, state_path, ["id"], [], exclude_epoch=exclude_epoch)
 
 
 def read_neardup_pairs(spark: SparkSession, pairs_path: str) -> DataFrame:
     """(id_a, id_b, jaccard) — the accumulated near-dup pair table,
-    one row per pair: later epochs beat earlier for a re-derived pair
-    (the old upsert's incoming-beats-current), jaccard descending
-    breaks ties within an epoch."""
-    store = _lww_read(spark, pairs_path, ["id_a", "id_b"], [F.desc("jaccard")])
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed pairs at {pairs_path}; run neardup_ingest_sink "
-            "through at least one micro-batch first"
-        )
-    return store
+    one row per pair: later epochs beat earlier for a re-derived pair,
+    jaccard descending breaks ties within an epoch."""
+    return _committed(spark, pairs_path, "neardup_ingest_sink", _PAIRS_LWW)
 
 
 def sketch_rollup_sink(
@@ -551,32 +680,14 @@ def sketch_rollup_sink(
 ) -> DataStreamWriter:
     """Streaming maintenance of the mergeable HLL sketch store — the
     incremental face of `aggregates.hll_sketch_rollup`: each
-    micro-batch pre-aggregates one sketch row per (fine cell, epoch)
-    and merges it into the persisted cell store. Coarse rollups read
-    the store with `read_sketch_rollup` and never touch the fact
-    stream.
-
-    Replay idempotence comes from the epoch-append commit
-    (`snapshots.epoch_append`): a re-run micro-batch REPLACES its own
-    epoch's file set rather than unioning twice, so both the distinct
-    estimates and n_rows stay exact under the file source's
-    at-least-once delivery. Merge I/O is O(batch) — one sketch row
-    per fine cell written as that epoch's files; the store is NEVER
-    rewritten on the hot path (round-12 fix: the old
-    read→union→overwrite merge rewrote the whole store per epoch —
-    O(store) I/O that kills a 100 TB streaming lane).
-    `read_sketch_rollup` unions base + epochs at query time, and
-    `compact_sketch_store` re-groups epochs offline without changing
-    any estimate (sketch union is associative)."""
-
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(
-            sketch_store_merge(store_path, fine_keys, distinct_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    micro-batch pre-aggregates one sketch row per fine cell as that
+    epoch's files, so both the distinct estimates and n_rows stay
+    exact under replay. Coarse rollups read the store with
+    `read_sketch_rollup` and never touch the fact stream;
+    `compact_sketch_store` re-groups epochs without changing any
+    estimate (sketch union is associative)."""
+    merge = sketch_store_merge(store_path, fine_keys, distinct_col)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def sketch_store_merge(
@@ -589,16 +700,11 @@ def sketch_store_merge(
     Spark's re-delivery converge."""
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            on_disk_epoch,
-        )
-
         cells = batch.groupBy(*fine_keys).agg(
             F.hll_sketch_agg(distinct_col).alias("sketch"),
             F.count(F.lit(1)).alias("n_rows"),
-        ).withColumn("epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long"))
-        epoch_append(cells, store_path, epoch_id)
+        )
+        _append_epoch(cells, store_path, epoch_id)
 
     return merge
 
@@ -612,14 +718,7 @@ def read_sketch_rollup(
     """Answer a coarse distinct rollup from the streaming sketch store
     alone: union the per-(cell, epoch) sketches up to `coarse_keys`.
     Same output shape as `hll_sketch_rollup`'s coarse table."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
-
-    store = epoch_read(spark, store_path)
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed sketch store at {store_path}; run sketch_rollup_sink "
-            "through at least one micro-batch first"
-        )
+    store = _committed(spark, store_path, "sketch_rollup_sink")
     return store.groupBy(*coarse_keys).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(est_name),
         F.sum("n_rows").alias("n_rows"),
@@ -632,26 +731,16 @@ def compact_sketch_store(
     """Fold all epochs of the sketch store into one row per cell:
     sketch union is associative, so every rollup estimate is unchanged
     and n_rows sums exactly; the store shrinks from cells × epochs to
-    cells rows.
-
-    Run OFFLINE, with the stream stopped at a committed checkpoint:
-    replay idempotence relies on a micro-batch replacing its own
-    epoch's file set, and compaction folds historical epochs into a
-    BASE version (`epoch = -1` rows) a replayed batch would no longer
-    replace. After a clean stop there is no uncommitted batch to
-    replay, and the restarted stream's new epochs never collide with
-    -1."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
+    cells rows."""
     epoch_compact(
         spark,
         store_path,
-        fold=lambda store: store.groupBy(*fine_keys)
-        .agg(
-            F.hll_union_agg("sketch").alias("sketch"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-        .withColumn("epoch", F.lit(-1).cast("long")),
+        fold=_as_base(
+            lambda store: store.groupBy(*fine_keys).agg(
+                F.hll_union_agg("sketch").alias("sketch"),
+                F.sum("n_rows").alias("n_rows"),
+            )
+        ),
     )
 
 
@@ -667,20 +756,9 @@ def vocab_store_sink(
     `text.merge_vocab_counts`): each micro-batch contributes one
     (token, n, epoch) row per token and `read_vocab_store` sums
     across epochs, so LM-quality scoring of a daily batch
-    (`text.surprisal_against_vocab`) never re-tokenizes the corpus.
-
-    Same replay contract as `sketch_rollup_sink`: a re-run micro-batch
-    REPLACES its own epoch's file set (`snapshots.epoch_append`),
-    keeping counts exact under the file source's at-least-once
-    delivery with O(batch) merge I/O — the store is never rewritten
-    on the hot path; `compact_vocab_store` folds epochs offline
-    (count addition is associative)."""
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(vocab_store_merge(store_path, id_col, text_col))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    (`text.surprisal_against_vocab`) never re-tokenizes the corpus."""
+    merge = vocab_store_merge(store_path, id_col, text_col)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def vocab_store_merge(store_path: str, id_col: str = "doc_id", text_col: str = "text"):
@@ -691,15 +769,7 @@ def vocab_store_merge(store_path: str, id_col: str = "doc_id", text_col: str = "
     from data_warehouse_nhom8_spark.operators.text import vocab_counts
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            on_disk_epoch,
-        )
-
-        counts = vocab_counts(batch, id_col, text_col).withColumn(
-            "epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long")
-        )
-        epoch_append(counts, store_path, epoch_id)
+        _append_epoch(vocab_counts(batch, id_col, text_col), store_path, epoch_id)
 
     return merge
 
@@ -708,31 +778,14 @@ def read_vocab_store(spark: SparkSession, store_path: str) -> DataFrame:
     """(token, n) summed across epochs — the vocabulary table
     `text.surprisal_against_vocab` scores against; equal to
     `text.vocab_counts` over everything ingested (pytest-gated)."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
-
-    store = epoch_read(spark, store_path)
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed vocab store at {store_path}; run vocab_store_sink "
-            "through at least one micro-batch first"
-        )
-    return store.groupBy("token").agg(F.sum("n").cast("long").alias("n"))
+    return _sum_fold(*_VOCAB_SUM)(_committed(spark, store_path, "vocab_store_sink"))
 
 
 def compact_vocab_store(spark: SparkSession, store_path: str) -> None:
     """Fold all epochs into a base version with one row per token
     (count addition is associative — every downstream surprisal score
-    unchanged). Run OFFLINE with the stream stopped at a committed
-    checkpoint, same discipline as `compact_sketch_store`."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
-    epoch_compact(
-        spark,
-        store_path,
-        fold=lambda store: store.groupBy("token")
-        .agg(F.sum("n").cast("long").alias("n"))
-        .withColumn("epoch", F.lit(-1).cast("long")),
-    )
+    unchanged)."""
+    epoch_compact(spark, store_path, fold=_as_base(_sum_fold(*_VOCAB_SUM)))
 
 
 def run_available_now(writer: DataStreamWriter) -> None:
@@ -759,17 +812,11 @@ def corpus_ingest_sink(
     `pipeline.corpus_prep`: each micro-batch of raw documents runs
     the SAME certified plan (quality gate → lang-ID → split, the
     q58 chain) and commits the batch's prepped docs / chunks as
-    epoch-append file sets (`snapshots.epoch_append` — O(batch)
-    merge I/O; round 12: the old keyed-upsert rewrite was O(corpus)
-    per micro-batch, the one thing a 100 TB crawl lane cannot
-    afford). Last-writer-wins by doc_id (and (doc_id, chunk_id) for
+    that epoch's files. Last-writer-wins by doc_id (and (doc_id, chunk_id) for
     chunks) is resolved AT READ TIME by `read_corpus_store` /
-    `read_chunks_store` — later epoch beats earlier (exactly the old
-    incoming-beats-current upsert), n_tokens / chunk_fp break ties
-    within an epoch; `compact_corpus_store` materializes the
-    resolution offline. Replays converge: a re-run micro-batch
-    replaces its own epoch's files, so the at-least-once file source
-    is effectively exactly-once here.
+    `read_chunks_store` — n_tokens / chunk_fp break ties within an
+    epoch; `compact_corpus_store` materializes the resolution
+    offline.
 
     Dedup semantics: exact dedup runs WITHIN each micro-batch plus
     id-keyed last-writer-wins ACROSS batches. Cross-batch
@@ -796,11 +843,6 @@ def corpus_ingest_sink(
     from data_warehouse_nhom8_spark.pipeline.corpus_prep import prepare_corpus_df
 
     def merge(batch: DataFrame, epoch_id: int) -> None:
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            on_disk_epoch,
-        )
-
         if html_col is not None:
             from data_warehouse_nhom8_spark.operators.text import html_text_cols
 
@@ -819,156 +861,38 @@ def corpus_ingest_sink(
                 max_cont_fraction=max_cont_fraction,
             )
         prepped = prepare_corpus_df(batch, min_tokens=min_tokens)
-        tagged = prepped.withColumn(
-            "epoch", F.lit(on_disk_epoch(corpus_path, epoch_id)).cast("long")
-        )
         # corpus first: a crash between the two appends re-runs the
         # micro-batch (at-least-once), and both appends replace their
         # own epoch's files — idempotent either way
-        epoch_append(tagged, corpus_path, epoch_id)
+        _append_epoch(prepped, corpus_path, epoch_id)
+        chunks = chunk_documents(prepped, chunk_tokens=chunk_tokens, stride=stride)
+        _append_epoch(chunks, chunks_path, epoch_id)
 
-        new_chunks = chunk_documents(
-            prepped, chunk_tokens=chunk_tokens, stride=stride
-        ).withColumn(
-            "epoch", F.lit(on_disk_epoch(chunks_path, epoch_id)).cast("long")
-        )
-        epoch_append(new_chunks, chunks_path, epoch_id)
-
-    _register_epoch_stores(checkpoint, corpus_path, chunks_path)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-
-
-# forced-broadcast ceiling for the live epoch tail's key set (on-disk
-# parquet bytes of the full tail — the key projection is smaller, so
-# this is conservative). 64 MiB compressed ≈ low-hundreds-MB in-memory
-# hash relation: comfortably executor/driver-safe at local and
-# cluster defaults, far above any on-cadence compaction tail.
-_TAIL_BROADCAST_MAX_BYTES = 64 << 20
-
-
-def _lww_resolve(store: DataFrame, keys: Sequence[str], tiebreak) -> DataFrame:
-    """Winner per key across epochs: later epoch beats earlier (the
-    old upsert's incoming-beats-current), `tiebreak` orders within an
-    epoch. Drops the storage-only epoch column so readers see exactly
-    the batch pipeline's schema."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(F.desc("epoch"), *tiebreak)
-    return (
-        store.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "epoch")
-    )
-
-
-def _lww_read(
-    spark: SparkSession,
-    path: str,
-    keys: Sequence[str],
-    tiebreak,
-    exclude_epoch: int | None = None,
-) -> DataFrame | None:
-    """SPLIT last-writer-wins read (round 12): a window over
-    base ∪ epochs shuffles the whole store per read; instead the
-    BASE is by construction already resolved to one row per key
-    (every base commit goes through the resolve fold, tagged
-    epoch = -1, which every live epoch ≥ 0 beats), so the read is
-      base rows whose key has NO live-epoch row   (broadcast anti —
-                                                   the base never
-                                                   shuffles)
-      ∪ the live-epoch tail resolved on its own   (window over the
-                                                   compaction-bounded
-                                                   tail only).
-    Identical output to resolving the union (pytest-gated by every
-    stream==batch equality test); O(base scan + tail window) instead
-    of O(store shuffle) at 100 TB."""
-    from data_warehouse_nhom8_spark.sources.snapshots import (
-        assert_stamp_format,
-        epoch_read_parts,
-        epoch_tail_bytes,
-    )
-
-    # r14 tripwire: refuse a rebased store whose live rows may carry
-    # pre-fix RAW epoch stamps (they'd silently lose every resolve
-    # below) — metadata-only check, repair = snapshots.epoch_restamp
-    assert_stamp_format(path)
-    base, tail = epoch_read_parts(spark, path, exclude_epoch=exclude_epoch)
-    if base is None and tail is None:
-        return None
-    if tail is None:
-        return base.drop("epoch")
-    tail_w = _lww_resolve(tail, keys, tiebreak)
-    if base is None:
-        return tail_w
-    tail_keys = tail.select(*keys).distinct()
-    # Broadcast only when the tail's on-disk bytes say it is small:
-    # the tail is bounded by compaction CADENCE, not by size, and a
-    # forced F.broadcast bypasses autoBroadcastJoinThreshold — a
-    # lagging compaction must degrade to a shuffled anti join (slow,
-    # base loses co-location for that read), never OOM the driver.
-    if epoch_tail_bytes(path, exclude_epoch) <= _TAIL_BROADCAST_MAX_BYTES:
-        tail_keys = F.broadcast(tail_keys)
-    keep = base.join(tail_keys, list(keys), "left_anti").drop("epoch")
-    return keep.unionByName(tail_w)
+    return _foreach_batch_sink(stream, checkpoint, merge, corpus_path, chunks_path)
 
 
 def read_corpus_store(spark: SparkSession, corpus_path: str) -> DataFrame:
     """The streamed corpus, last-writer-wins resolved per doc_id —
     equal to the batch `prepare_corpus_df` output over everything
-    ingested (pytest-gated). The epoch column is storage-internal and
-    dropped here."""
-    store = _lww_read(spark, corpus_path, ["doc_id"], [F.desc("n_tokens")])
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed corpus store at {corpus_path}; run "
-            "corpus_ingest_sink through at least one micro-batch first"
-        )
-    return store
+    ingested (pytest-gated)."""
+    return _committed(spark, corpus_path, "corpus_ingest_sink", _CORPUS_LWW)
 
 
 def read_chunks_store(spark: SparkSession, chunks_path: str) -> DataFrame:
     """The streamed chunk table, last-writer-wins resolved per
     (doc_id, chunk_id) — equal to the batch `chunk_documents` output
     over the resolved corpus (pytest-gated)."""
-    store = _lww_read(
-        spark, chunks_path, ["doc_id", "chunk_id"], [F.desc("chunk_fp")]
-    )
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed chunks store at {chunks_path}; run "
-            "corpus_ingest_sink through at least one micro-batch first"
-        )
-    return store
+    return _committed(spark, chunks_path, "corpus_ingest_sink", _CHUNKS_LWW)
 
 
 def compact_corpus_store(
     spark: SparkSession, corpus_path: str, chunks_path: str | None = None
 ) -> None:
     """Materialize the LWW resolution into a base version and drop the
-    folded epochs — corpus and (optionally) chunks. The resolved rows
-    keep `epoch = -1` storage tags so later live epochs still beat
-    them at read time. OFFLINE only, stream stopped at a committed
-    checkpoint — same discipline as `compact_sketch_store`."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
-    def fold_for(keys, tiebreak):
-        return lambda store: _lww_resolve(store, keys, tiebreak).withColumn(
-            "epoch", F.lit(-1).cast("long")
-        )
-
-    epoch_compact(
-        spark, corpus_path, fold=fold_for(["doc_id"], [F.desc("n_tokens")])
-    )
+    folded epochs — corpus and (optionally) chunks."""
+    epoch_compact(spark, corpus_path, fold=_as_base(_lww_fold(*_CORPUS_LWW)))
     if chunks_path is not None:
-        epoch_compact(
-            spark,
-            chunks_path,
-            fold=fold_for(["doc_id", "chunk_id"], [F.desc("chunk_fp")]),
-        )
+        epoch_compact(spark, chunks_path, fold=_as_base(_lww_fold(*_CHUNKS_LWW)))
 
 
 def freq_head_sink(
@@ -982,11 +906,8 @@ def freq_head_sink(
     """Streaming maintenance of the heavy-hitter candidate store — the
     incremental face of `aggregates.freq_candidate_rollup`: each
     micro-batch counts its (fine cell, item) pairs, keeps the local
-    top-m per cell, and merges them into the persisted store keyed by
-    (cell, item, epoch). Replay-idempotent the same way as
-    `sketch_rollup_sink`: a re-run batch REPLACES its own epoch's file
-    set (`snapshots.epoch_append` — O(batch) merge I/O, the store is
-    never rewritten on the hot path).
+    top-m per cell, and commits them as that epoch's
+    (cell, item, epoch) rows.
 
     The per-(cell, epoch) truncation composes with the batch
     operator's bound — each epoch acts as one more "cell" in the
@@ -995,25 +916,14 @@ def freq_head_sink(
     equals the exact batch answer (pinned in test_streaming)."""
     def merge(batch: DataFrame, epoch_id: int) -> None:
         from data_warehouse_nhom8_spark.operators.aggregates import local_topm
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            on_disk_epoch,
-        )
 
         counts = batch.groupBy(*fine_keys, item_col).agg(
             F.count(F.lit(1)).alias("cnt")
         )
-        cells = local_topm(counts, list(fine_keys), "cnt", item_col, m).withColumn(
-            "epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long")
-        )
-        epoch_append(cells, store_path, epoch_id)
+        cells = local_topm(counts, list(fine_keys), "cnt", item_col, m)
+        _append_epoch(cells, store_path, epoch_id)
 
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def read_freq_head(
@@ -1028,14 +938,7 @@ def read_freq_head(
     keep k. Same output shape as `freq_candidate_rollup`'s head."""
     from pyspark.sql.window import Window
 
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
-
-    store = epoch_read(spark, store_path)
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed candidate store at {store_path}; run freq_head_sink "
-            "through at least one micro-batch first"
-        )
+    store = _committed(spark, store_path, "freq_head_sink")
     merged = store.groupBy(*coarse_keys, item_col).agg(
         F.sum("cnt").alias("lb_count")
     )
@@ -1054,19 +957,14 @@ def compact_freq_store(
     row per (cell, item), re-truncated to the per-cell top-m: candidate
     counts are summable, and re-truncating a candidate list yields a
     candidate list (merged counts stay lower bounds; the shortfall
-    bound composes like one more truncation level). Same offline
-    contract as `compact_sketch_store` — run with the stream stopped
-    at a committed checkpoint; folded rows take `epoch = -1`."""
+    bound composes like one more truncation level)."""
     from data_warehouse_nhom8_spark.operators.aggregates import local_topm
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
 
     def fold(store: DataFrame) -> DataFrame:
         merged = store.groupBy(*fine_keys, item_col).agg(F.sum("cnt").alias("cnt"))
-        return local_topm(merged, list(fine_keys), "cnt", item_col, m).withColumn(
-            "epoch", F.lit(-1).cast("long")
-        )
+        return local_topm(merged, list(fine_keys), "cnt", item_col, m)
 
-    epoch_compact(spark, store_path, fold=fold)
+    epoch_compact(spark, store_path, fold=_as_base(fold))
 
 
 def interval_stream_join(
@@ -1154,22 +1052,12 @@ def span_store_sink(
     """Streaming maintenance of the span-dedup window-hash store — the
     incremental face of `operators.span_dedup` (the q110 operator):
     each micro-batch of documents contributes its per-hash DISTINCT
-    document counts, keyed by epoch, so the batch-side detector
+    document counts as that epoch's files, so the batch-side detector
     (`duplicated_spans_incremental` over `read_span_store`) judges a
     daily batch against the whole streamed corpus while hashing only
-    that batch. Same epoch-replacement idempotence as the sketch
-    store: a replayed micro-batch REPLACES its own epoch's file set
-    (`snapshots.epoch_append` — O(batch) merge I/O, the store is
-    never rewritten on the hot path), so the additive counts stay
-    exact under at-least-once delivery."""
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(
-            span_store_merge(store_path, window, id_col, text_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    that batch."""
+    merge = span_store_merge(store_path, window, id_col, text_col)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def span_store_merge(
@@ -1186,47 +1074,59 @@ def span_store_merge(
         from data_warehouse_nhom8_spark.operators.span_dedup import (
             span_store_build,
         )
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            on_disk_epoch,
-        )
 
-        part = span_store_build(
-            batch, window=window, id_col=id_col, text_col=text_col
-        ).withColumn("epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long"))
-        epoch_append(part, store_path, epoch_id)
+        part = span_store_build(batch, window=window, id_col=id_col, text_col=text_col)
+        _append_epoch(part, store_path, epoch_id)
 
     return merge
 
 
+def _refuse_hex_span_keys(store: DataFrame | None, store_path: str) -> None:
+    """Raise when a committed part of the span store holds hex-string
+    window hashes — written before `span_store_build` switched to
+    binary `unhex(md5)` keys (r16). Mixed with binary parts, or joined
+    against the binary batch hashes of `duplicated_spans_incremental`,
+    such rows match nothing and no error would surface. Reads one
+    parquet footer per part directory."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if store is None:
+        return
+    first = {}
+    for f in store.inputFiles():
+        first.setdefault(os.path.dirname(f), unquote(urlparse(f).path))
+    hex_dirs = sorted(
+        d for d, f in first.items()
+        if pa.types.is_string(pq.read_schema(f).field("h").type)
+    )
+    if hex_dirs:
+        raise ValueError(
+            f"span store at {store_path} holds hex-string window hashes in "
+            f"{hex_dirs}, written before span_store_build's binary "
+            "unhex(md5) keys: they would match no batch hash. Rebuild the "
+            "store at a fresh path: commit span_store_build over the corpus "
+            "as its epoch 0, or replay the corpus through span_store_sink."
+        )
+
+
 def read_span_store(spark: SparkSession, store_path: str) -> DataFrame:
     """(h, n_docs) summed across epochs — the exact count table
-    `duplicated_spans_incremental` consumes (counts are additive over
-    the disjoint per-epoch document sets)."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
-
-    store = epoch_read(spark, store_path)
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed span store at {store_path}; run span_store_sink "
-            "through at least one micro-batch first"
-        )
-    return store.groupBy("h").agg(F.sum("n_docs").alias("n_docs"))
+    `duplicated_spans_incremental` consumes. Refuses a store holding
+    hex-string hashes (`_refuse_hex_span_keys`)."""
+    store = _committed(spark, store_path, "span_store_sink")
+    _refuse_hex_span_keys(store, store_path)
+    return _sum_fold(*_SPAN_SUM)(store)
 
 
 def compact_span_store(spark: SparkSession, store_path: str) -> None:
-    """Fold all epochs into a base version with one `epoch = -1` row
-    per hash (counts are additive). OFFLINE only, stream stopped at a
-    committed checkpoint — same contract as compact_sketch_store."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
-    epoch_compact(
-        spark,
-        store_path,
-        fold=lambda store: store.groupBy("h")
-        .agg(F.sum("n_docs").alias("n_docs"))
-        .withColumn("epoch", F.lit(-1).cast("long")),
-    )
+    """Fold all epochs into a base version with one row per hash
+    (counts are additive). Refuses a store holding hex-string hashes:
+    folding them with binary ones would hide them from the check."""
+    _refuse_hex_span_keys(epoch_read(spark, store_path), store_path)
+    epoch_compact(spark, store_path, fold=_as_base(_sum_fold(*_SPAN_SUM)))
 
 
 def url_store_sink(
@@ -1253,25 +1153,11 @@ def url_store_sink(
     operator's winner). Equality with a batch run that ranks by
     (epoch, md5-pri, id) is pytest-gated; the per-domain cap stays a
     batch/corpus-level policy applied over `read_url_store` output.
-
-    Same epoch-replacement idempotence as the span store: a replayed
-    micro-batch recomputes its delta against the store WITHOUT its
-    own epoch (`epoch_read(exclude_epoch=...)`) and its epoch-append
-    supersedes the earlier attempt, so at-least-once delivery
-    converges. Merge WRITE is O(batch) — only the admitted rows land
-    as that epoch's files; the registry is never rewritten on the hot
-    path (round-12 fix). The anti-join READ keys on canon_url — at
-    100 TB keep the compacted base bucketed on canon_url
-    (`compact_url_store` passes bucket_by) so only the batch side
-    shuffles."""
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(
-            url_store_merge(store_path, url_col, id_col, seed)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    The anti-join READ keys on canon_url — at 100 TB keep the
+    compacted base bucketed on canon_url (`compact_url_store` passes
+    bucket_by) so only the batch side shuffles."""
+    merge = url_store_merge(store_path, url_col, id_col, seed)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def url_store_merge(
@@ -1290,13 +1176,7 @@ def url_store_merge(
         from data_warehouse_nhom8_spark.operators.corpus import (
             url_canonical_cols,
         )
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            epoch_read_parts,
-            on_disk_epoch,
-        )
 
-        spark = batch.sparkSession
         cols = url_canonical_cols(url_col)
         pri = F.md5(
             F.concat_ws(":", F.col(id_col).cast("string"), F.lit(seed))
@@ -1312,24 +1192,9 @@ def url_store_merge(
             .withColumn("__r", F.row_number().over(w))
             .filter(F.col("__r") == 1)
             .select("canon_url", "domain", "doc_id")
-            .withColumn(
-                "epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long")
-            )
         )
-        # SPLIT anti-join (round 12): anti vs the base and the epoch
-        # tail separately — unioning a bucketed base with plain epoch
-        # files would erase its distribution and shuffle the whole
-        # registry every batch; sequentially, the base stays put
-        # (batch-sized shuffle onto its buckets) and the epoch tail
-        # (bounded by compaction cadence) joins broadcast-sized.
-        # Anti against A∪B ≡ anti A then anti B.
-        base, tail = epoch_read_parts(spark, store_path, exclude_epoch=epoch_id)
-        fresh = batch_winners
-        if base is not None:
-            fresh = fresh.join(base.select("canon_url"), "canon_url", "left_anti")
-        if tail is not None:
-            fresh = fresh.join(tail.select("canon_url"), "canon_url", "left_anti")
-        epoch_append(fresh, store_path, epoch_id)
+        fresh = _first_seen(batch_winners, store_path, "canon_url", epoch_id)
+        _append_epoch(fresh, store_path, epoch_id)
 
     return merge
 
@@ -1339,15 +1204,7 @@ def read_url_store(spark: SparkSession, store_path: str) -> DataFrame:
     registry: exactly one row per canonical URL ever admitted (the
     merge only inserts never-seen URLs, so no cross-epoch fold is
     needed — the store IS the registry)."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
-
-    store = epoch_read(spark, store_path)
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed url store at {store_path}; run url_store_sink "
-            "through at least one micro-batch first"
-        )
-    return store
+    return _committed(spark, store_path, "url_store_sink")
 
 
 def compact_url_store(spark: SparkSession, store_path: str) -> None:
@@ -1355,10 +1212,7 @@ def compact_url_store(spark: SparkSession, store_path: str) -> None:
     (rows are disjoint across epochs — the fold is identity, this is
     pure file-count/layout maintenance). Bucketing the base on
     canon_url means the merge's first-seen anti-join no longer
-    shuffles the store side. OFFLINE only, stream stopped at a
-    committed checkpoint — same contract as compact_sketch_store."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
+    shuffles the store side."""
     epoch_compact(spark, store_path, bucket_by=["canon_url"])
 
 
@@ -1380,14 +1234,9 @@ def ivf_store_sink(
     in an EARLIER epoch is ignored (a document embeds once; this also
     sidesteps the cross-cell tombstone a last-writer-wins re-embed
     would need — re-embedding pipelines rebuild the index with
-    `ivf_write_index` at the next refit instead).
-
-    Same epoch-replacement idempotence as the other store faces: a
-    replayed micro-batch recomputes its delta against the store
-    without its own epoch and its epoch-append supersedes the earlier
-    attempt, so at-least-once delivery converges (pytest-gated, plus
-    probe-equality vs a one-shot batch index on the union). Merge
-    write is O(batch) — the index is never rewritten on the hot path.
+    `ivf_write_index` at the next refit instead). Replay convergence
+    and probe-equality vs a one-shot batch index on the union are
+    pytest-gated.
 
     Scale: assignment is map-only (k·d fold per vector, no shuffle);
     the first-seen anti-join keys on the id. At rest keep the store
@@ -1396,14 +1245,8 @@ def ivf_store_sink(
     `cosine_topk_ivf_probe`, whose cell filter then skips files by
     the stats manifest exactly like the at-rest `ivf_write_index`
     layout prunes partitions."""
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(
-            ivf_store_merge(model_path, store_path, id_col, vec_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    merge = ivf_store_merge(model_path, store_path, id_col, vec_col)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def ivf_store_merge(
@@ -1423,24 +1266,12 @@ def ivf_store_merge(
             ivf_assign,
             ivf_load_model,
         )
-        from data_warehouse_nhom8_spark.sources.snapshots import (
-            epoch_append,
-            epoch_read_parts,
-            on_disk_epoch,
-        )
 
-        spark = batch.sparkSession
         centroids = ivf_load_model(model_path)
-        assigned = (
-            ivf_assign(batch, centroids, id_col=id_col, vec_col=vec_col)
-            .select(
-                F.col(id_col).alias("id"),
-                F.col("__v").alias("v"),
-                "cluster",
-            )
-            .withColumn(
-                "epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long")
-            )
+        assigned = ivf_assign(batch, centroids, id_col=id_col, vec_col=vec_col).select(
+            F.col(id_col).alias("id"),
+            F.col("__v").alias("v"),
+            "cluster",
         )
         # one deterministic winner per id WITHIN the batch (mirrors
         # url_store_merge's in-batch row_number winner): duplicate ids
@@ -1454,15 +1285,8 @@ def ivf_store_merge(
             .filter(F.col("__r") == 1)
             .drop("__r")
         )
-        # split anti-join, same rationale as url_store_merge: the
-        # bucketed base never shuffles, the epoch tail joins on its own
-        base, tail = epoch_read_parts(spark, store_path, exclude_epoch=epoch_id)
-        fresh = assigned
-        if base is not None:
-            fresh = fresh.join(base.select(F.col("id")), "id", "left_anti")
-        if tail is not None:
-            fresh = fresh.join(tail.select(F.col("id")), "id", "left_anti")
-        epoch_append(fresh, store_path, epoch_id)
+        fresh = _first_seen(assigned, store_path, "id", epoch_id)
+        _append_epoch(fresh, store_path, epoch_id)
 
     return merge
 
@@ -1472,14 +1296,7 @@ def read_ivf_store(spark: SparkSession, store_path: str, id_col: str = "vec_id")
     shape `cosine_topk_ivf_probe` consumes (one row per id ever
     admitted; the merge only inserts never-seen ids — within a batch
     a deterministic row_number winner, across batches first-seen)."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
-
-    store = epoch_read(spark, store_path)
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed ivf store at {store_path}; run ivf_store_sink "
-            "through at least one micro-batch first"
-        )
+    store = _committed(spark, store_path, "ivf_store_sink")
     return store.select(
         F.col("id").alias(id_col), F.col("v").alias("__v"), "cluster"
     )
@@ -1488,10 +1305,7 @@ def read_ivf_store(spark: SparkSession, store_path: str, id_col: str = "vec_id")
 def compact_ivf_store(spark: SparkSession, store_path: str) -> None:
     """Fold the index's epoch files into one base version (rows are
     disjoint across epochs — identity fold; file-count maintenance
-    so probes list O(1) dirs). OFFLINE only, stream stopped at a
-    committed checkpoint."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
+    so probes list O(1) dirs)."""
     epoch_compact(spark, store_path)
 
 # ------------------------------------------------ simhash signature store
@@ -1524,23 +1338,16 @@ def simhash_sig_store_update(
     text_col: str = "text",
 ) -> None:
     """Incremental batch face: signature the NEW documents only and
-    epoch-append — O(batch) compute and I/O, the store is never
-    rewritten. Last-writer-wins per id at read time, so a re-ingested
-    document (same id, newer epoch) supersedes its old signature
-    without a tombstone. incremental==full equality is pytest-gated
+    epoch-append — O(batch) compute and I/O. Last-writer-wins per id
+    at read time, so a re-ingested document (same id, newer epoch)
+    supersedes its old signature without a tombstone.
+    incremental==full equality is pytest-gated
     (test_sig_cluster_stores)."""
     from data_warehouse_nhom8_spark.operators.neardup import (
         simhash_signatures,
     )
-    from data_warehouse_nhom8_spark.sources.snapshots import (
-        epoch_append,
-        on_disk_epoch,
-    )
 
-    sigs = simhash_signatures(batch_docs, id_col, text_col).withColumn(
-        "epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long")
-    )
-    epoch_append(sigs, store_path, epoch_id)
+    _append_epoch(simhash_signatures(batch_docs, id_col, text_col), store_path, epoch_id)
 
 
 def simhash_sig_store_sink(
@@ -1552,19 +1359,11 @@ def simhash_sig_store_sink(
 ) -> DataStreamWriter:
     """Streaming ingest face: each micro-batch of documents folds its
     own signatures (map-only — the SWAR fold never shuffles) and
-    epoch-appends them. Same epoch-replacement idempotence as the
-    other store faces: a replayed micro-batch's append supersedes its
-    earlier attempt, so at-least-once delivery converges; LWW per id
-    across epochs gives re-crawled documents update semantics.
-    stream==batch equality is pytest-gated."""
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(
-            simhash_sig_store_merge(store_path, id_col, text_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    epoch-appends them; LWW per id across epochs gives re-crawled
+    documents update semantics. stream==batch equality is
+    pytest-gated."""
+    merge = simhash_sig_store_merge(store_path, id_col, text_col)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def simhash_sig_store_merge(
@@ -1588,31 +1387,17 @@ def read_simhash_sig_store(spark: SparkSession, store_path: str) -> DataFrame:
     path. Duplicate ids WITHIN one epoch resolve deterministically on
     the signature value (a corpus ships one text per id; the tiebreak
     just pins replay determinism)."""
-    store = _lww_read(spark, store_path, ["id"], [F.desc("sh")])
-    if store is None:
-        raise FileNotFoundError(
-            f"no committed simhash sig store at {store_path}; run "
-            "simhash_sig_store_build or the sink through at least one "
-            "micro-batch first"
-        )
-    return store
+    sink = "simhash_sig_store_build or simhash_sig_store_sink"
+    return _committed(spark, store_path, sink, _SIMHASH_LWW)
 
 
 def compact_simhash_sig_store(spark: SparkSession, store_path: str) -> None:
     """Materialize the LWW resolution into a bucketed base version
     (bucketed on id: the read's anti-join and any downstream
     signature join stop shuffling the store side) and drop the folded
-    epochs. OFFLINE only, stream stopped at a committed checkpoint —
-    `epoch_compact` enforces it mechanically."""
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
-
+    epochs."""
     epoch_compact(
-        spark,
-        store_path,
-        fold=lambda s: _lww_resolve(s, ["id"], [F.desc("sh")]).withColumn(
-            "epoch", F.lit(-1).cast("long")
-        ),
-        bucket_by=["id"],
+        spark, store_path, fold=_as_base(_lww_fold(*_SIMHASH_LWW)), bucket_by=["id"]
     )
 
 
@@ -1640,32 +1425,22 @@ def cluster_map_store_update(
     """Epoch-append an edge batch (id_a, id_b) — O(batch) I/O; the
     incremental contract CC(base stars ∪ new edges) == CC(all
     original edges) is pytest-gated (test_sig_cluster_stores)."""
-    from data_warehouse_nhom8_spark.sources.snapshots import (
-        epoch_append,
-        on_disk_epoch,
-    )
-
     rows = edges.select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
-    ).withColumn("epoch", F.lit(on_disk_epoch(store_path, epoch_id)).cast("long"))
-    epoch_append(rows, store_path, epoch_id)
+    )
+    _append_epoch(rows, store_path, epoch_id)
 
 
 def cluster_edges_sink(
     stream: DataFrame, store_path: str, checkpoint: str
 ) -> DataStreamWriter:
     """Streaming ingest face: each micro-batch of detector edges
-    epoch-appends. Replay supersedes its own epoch (idempotent);
-    duplicate edges across epochs are harmless — connected components
-    is a set-semantics fold (the CC's internal distinct dedups), and
-    compaction contracts them away."""
-    _register_epoch_stores(checkpoint, store_path)
-    return (
-        stream.writeStream.foreachBatch(cluster_map_store_merge(store_path))
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
+    epoch-appends. Duplicate edges across epochs are harmless —
+    connected components is a set-semantics fold (the CC's internal
+    distinct dedups), and compaction contracts them away."""
+    merge = cluster_map_store_merge(store_path)
+    return _foreach_batch_sink(stream, checkpoint, merge, store_path)
 
 
 def cluster_map_store_merge(store_path: str):
@@ -1687,15 +1462,9 @@ def read_cluster_map_store(spark: SparkSession, store_path: str) -> DataFrame:
     from data_warehouse_nhom8_spark.operators.dedup_clusters import (
         connected_components,
     )
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_read
 
-    edges = epoch_read(spark, store_path)
-    if edges is None:
-        raise FileNotFoundError(
-            f"no committed cluster map store at {store_path}; run "
-            "cluster_map_store_build or the sink through at least one "
-            "micro-batch first"
-        )
+    sink = "cluster_map_store_build or cluster_edges_sink"
+    edges = _committed(spark, store_path, sink)
     return connected_components(edges.select("id_a", "id_b"), "id_a", "id_b")
 
 
@@ -1704,17 +1473,13 @@ def compact_cluster_map_store(spark: SparkSession, store_path: str) -> None:
     components to fixpoint, write one (member, root) edge per
     clustered id as the new base, drop the folded epochs. Star
     contraction preserves min-id labels exactly (the root is the
-    component's minimum member and is itself present), pytest-gated.
-    OFFLINE only, stream stopped at a committed checkpoint."""
+    component's minimum member and is itself present), pytest-gated."""
     from data_warehouse_nhom8_spark.operators.dedup_clusters import (
         connected_components,
     )
-    from data_warehouse_nhom8_spark.sources.snapshots import epoch_compact
 
     def fold(store: DataFrame) -> DataFrame:
         cc = connected_components(store.select("id_a", "id_b"), "id_a", "id_b")
-        return cc.select(
-            F.col("id").alias("id_a"), F.col("component").alias("id_b")
-        ).withColumn("epoch", F.lit(-1).cast("long"))
+        return cc.select(F.col("id").alias("id_a"), F.col("component").alias("id_b"))
 
-    epoch_compact(spark, store_path, fold=fold)
+    epoch_compact(spark, store_path, fold=_as_base(fold))

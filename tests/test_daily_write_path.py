@@ -174,6 +174,7 @@ def test_ingest_source_counts_and_writes_only_valid_rows(spark, tmp_path):
     assert n == 2
     bronze = read_day(spark, str(tmp_path / "bronze"), D1).collect()
     assert sorted(r["job_title"] for r in bronze) == ["Dev", "Tab"]
+    assert {r["job_id"] for r in bronze} == {"\t", "1"}
     assert [r["rows_processed"] for r in led._read().collect() if r["status"] == "Success"] == [2]
 
 

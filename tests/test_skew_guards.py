@@ -107,3 +107,16 @@ def test_incremental_detector_bounded_on_skew(spark, skewed):
     assert (N_BOILER, N_BOILER + 1) in pairs
     assert all({a, b} & {N_BOILER, N_BOILER + 1, N_BOILER + 2} for a, b in pairs)
     assert len(pairs) < 100
+
+
+def test_in_memory_corpus_size_is_over_the_spans_broadcast_bound(spark):
+    """An in-memory corpus has no input files, so its size is unknown:
+    the scrub's size policy must treat it as over-bound (shuffle
+    join), never as 0 bytes (forced broadcast)."""
+    from data_warehouse_nhom8_spark.operators.corpus import (
+        _SPANS_BROADCAST_MAX_CORPUS_BYTES,
+        _input_bytes,
+    )
+
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    assert _input_bytes(df) > _SPANS_BROADCAST_MAX_CORPUS_BYTES
