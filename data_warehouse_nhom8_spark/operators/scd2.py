@@ -16,12 +16,19 @@ Decisions encoded here (SURVEY §4 "custom work"):
     the inserted batch, offset by max existing sk — reruns produce
     identical keys (never monotonically_increasing_id).
 
-Plan shape & scale: one shuffle of `current` and `incoming` on the
-normalized natural key (a single full-outer-style join computes
-changed/unchanged/new in one pass); at 100 TB `current` should be
-bucketed on the key so only the increment shuffles. The output is a
-full snapshot — pair with dynamic partition overwrite to rewrite only
-affected partitions.
+Plan shape & scale: each input is planned once, however many
+consumers it has. Two increment-sized parts are computed eagerly and
+kept in executor blocks (localCheckpoint): the deduped increment (the
+one read of the increment), then the live rows it matches with a
+change flag (a scan of `current`); one aggregate over `current` gives
+the largest surrogate key. The delta is derived from those blocks —
+expired versions ∪ new versions — and the snapshot is `current` minus
+the changed keys' live rows, ∪ the delta: one more scan of `current`,
+no read of the increment. An increment side is broadcast when its
+materialized size fits autoBroadcastJoinThreshold. At 100 TB
+`current` should be bucketed on the normalized key so no scan
+shuffles it. The output is a full snapshot — pair with dynamic
+partition overwrite to rewrite only affected partitions.
 """
 
 from __future__ import annotations
@@ -48,6 +55,7 @@ def scd2_merge(
     normalize_keys: bool = True,
     collate_compare: bool = True,
     keep_norm_keys: bool = False,
+    held: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Return the post-merge snapshot (history + current rows).
 
@@ -71,6 +79,12 @@ def scd2_merge(
     tracked attribute is NOT a change, so it must not spuriously
     expire and re-insert a version. Non-string columns always compare
     exactly. Pass False for binary comparison.
+
+    The merge computes the increment-sized parts eagerly, once: the
+    deduped increment, then the live rows it matches with their change
+    flag. When `held` is given, those materialized DataFrames are
+    appended to it; `release_materialized(held)` frees them once the
+    returned snapshot has been written.
     """
     sentinel = F.lit(CURRENT_SENTINEL).cast("date")
     eff = F.lit(effective_date).cast("date")
@@ -108,6 +122,8 @@ def scd2_merge(
     inc = latest_per_key(inc_n, nk, tiebreak)
 
     nk_drop = [] if keep_norm_keys else nk
+    held = [] if held is None else held
+    inc = _materialize(inc, held)
 
     if current is None:
         new_rows = inc.drop(*nk_drop) if nk_drop else inc
@@ -116,16 +132,6 @@ def scd2_merge(
         )
 
     cur = with_norm(current)
-    live = cur.filter(F.col(expired_col) == sentinel)
-    dead = cur.filter(F.col(expired_col) != sentinel).drop(*nk_drop)
-
-    inc_cmp = inc.select(
-        *nk,
-        *[F.col(c).alias(f"__inc_{c}") for c in compare_cols],
-        F.lit(1).alias("__matched"),
-    )
-    j = live.join(inc_cmp, on=nk, how="left")
-
     string_cols = {f.name for f in incoming.schema.fields if f.dataType.simpleString() == "string"}
 
     def differs(c: str):
@@ -137,46 +143,102 @@ def scd2_merge(
     change_cond = F.lit(False)
     for c in compare_cols:
         change_cond = change_cond | differs(c)
-    is_changed = F.col("__matched").isNotNull() & change_cond
 
-    inc_cols = [f"__inc_{c}" for c in compare_cols]
-    expired_now = (
-        j.filter(is_changed)
-        .drop(*inc_cols, "__matched", *nk_drop)
-        .withColumn(expired_col, eff)
+    def live_key_is(prefix: str):
+        """A live `cur` row whose key equals the other side's `prefix`ed key."""
+        cond = F.col(expired_col) == sentinel
+        for k in nk:
+            cond = cond & (F.col(k) == F.col(f"{prefix}{k}"))
+        return cond
+
+    # The live rows the increment matches, with their change flag. A
+    # key whose live rows disagree (a broken invariant) counts as
+    # changed when any of them differs: all of them expire and one new
+    # version replaces them, so the key keeps exactly one live row.
+    inc_cmp = inc.select(
+        *[F.col(k).alias(f"__inc{k}") for k in nk],
+        *[F.col(c).alias(f"__inc_{c}") for c in compare_cols],
     )
-    still_live = j.filter(~is_changed).drop(*inc_cols, "__matched", *nk_drop)
+    matched = _materialize(
+        cur.join(_broadcast_if_fits(inc_cmp, inc), live_key_is("__inc"))
+        .select(*cur.columns, F.max(change_cond).over(Window.partitionBy(*nk)).alias("__changed")),
+        held,
+    )
+    # the largest key in the table: a top-1 runs as one job without a
+    # shuffle, max() as two under adaptive execution
+    top = cur.select(sk_col).orderBy(F.desc_nulls_last(sk_col)).limit(1).collect()  # bounded-collect: one row
+    base = top[0][0] if top else None
 
+    changed = matched.filter("__changed")
+    expired_now = changed.drop("__changed", *nk_drop).withColumn(expired_col, eff)
     # New versions: incoming keys that are brand-new OR whose live row
-    # just got expired (changed). Equivalent to anti-join against the
-    # *unchanged* live set.
-    unchanged_keys = j.filter(~is_changed).select(*nk)
+    # just got expired, i.e. the increment minus the unchanged keys.
+    unchanged_keys = matched.filter(~F.col("__changed")).select(*nk)
     new_versions = (
-        inc.join(unchanged_keys, on=nk, how="left_anti")
+        inc.join(_broadcast_if_fits(unchanged_keys, matched), on=nk, how="left_anti")
         .drop(*nk_drop)
         .withColumn(expired_col, sentinel)
     )
-    new_with_sks = _assign_sks(new_versions, cur.drop(*nk), sk_col, natural_keys)
+    new_with_sks = _assign_sks(new_versions, base, sk_col, natural_keys)
 
-    out_cols = dead.columns
+    # The one scan of `current` in the rewrite: every row but the live
+    # versions of the changed keys.
+    changed_keys = changed.select(*[F.col(k).alias(f"__chg{k}") for k in nk])
+    kept = cur.join(_broadcast_if_fits(changed_keys, matched), live_key_is("__chg"), "left_anti")
+
+    out_cols = [c for c in cur.columns if c not in nk_drop]
     return (
-        dead.select(out_cols)
+        kept.select(out_cols)
         .unionByName(expired_now.select(out_cols))
-        .unionByName(still_live.select(out_cols))
         .unionByName(new_with_sks.select(out_cols))
     )
 
 
+def release_materialized(held: list[DataFrame]) -> None:
+    """Free the blocks of the DataFrames a merge materialized (its
+    `held` list). Call it once nothing reads the merge's output any
+    more, e.g. after the snapshot is written and read back from
+    storage; until then the blocks stay until the JVM collects them."""
+    for df in held:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+    held.clear()
+
+
+def _materialize(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """`df` computed once, eagerly, into executor blocks; later plans
+    read the blocks instead of re-running `df`'s plan."""
+    out = df.localCheckpoint(eager=True)
+    held.append(out)
+    return out
+
+
+def _broadcast_if_fits(side: DataFrame, materialized: DataFrame) -> DataFrame:
+    """`side` with a broadcast hint when the materialized DataFrame it
+    is derived from fits the session's autoBroadcastJoinThreshold (-1
+    disables broadcasts). A checkpoint's plan statistics are those of
+    the plan it replaced, so the planner cannot judge its size itself."""
+    spark = materialized.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0:
+        return side
+    rdd_id = materialized._jdf.queryExecution().logical().rdd().id()
+    for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return F.broadcast(side) if info.memSize() + info.diskSize() <= limit else side
+    return side
+
+
 def _assign_sks(
     new_rows: DataFrame,
-    existing: DataFrame | None,
+    base: int | None,
     sk_col: str,
     natural_keys: Sequence[str],
 ) -> DataFrame:
     """Deterministic surrogate keys at any batch size: global rank of
-    each row in the total order by natural key, offset by
-    max(existing). Identical input ⇒ identical keys, which is what
-    makes reruns idempotent (AUTO_INCREMENT, reference
+    each row in the total order by natural key, offset by `base`, the
+    largest key already in the table (None: the table is empty).
+    Identical input ⇒ identical keys,
+    which is what makes reruns idempotent (AUTO_INCREMENT, reference
     create_warehouse_db.sql:7724, is NOT deterministic under replay —
     this is deliberately stronger).
 
@@ -207,17 +269,11 @@ def _assign_sks(
         .withColumn("__off", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).cast("long"))
         .select("__pid", "__off")
     )
-    numbered = (
+    return (
         local.join(F.broadcast(offsets), on="__pid")
-        .withColumn(sk_col, (F.col("__rn") + F.col("__off")).cast("long"))
+        .withColumn(sk_col, (F.col("__rn") + F.col("__off") + F.lit(base or 0)).cast("long"))
         .drop("__pid", "__rn", "__off")
     )
-    if existing is None:
-        return numbered
-    base = existing.agg(F.coalesce(F.max(sk_col), F.lit(0)).alias("m"))
-    return numbered.crossJoin(F.broadcast(base)).withColumn(
-        sk_col, (F.col(sk_col) + F.col("m")).cast("long")
-    ).drop("m")
 
 
 def scd2_invariant_violations(snapshot: DataFrame, natural_keys: Sequence[str],

@@ -8,8 +8,10 @@ failed day continues where it stopped.
 
 A day pays Spark jobs only for its data: extract writes each source's
 rows once, the ledger and the report's row counts are answered on the
-driver (pyarrow over small files and parquet footers), and the
-datamart is one rollup job.
+driver (pyarrow over small files and parquet footers), the SCD2 merge
+reads the day's increment once and the warehouse twice (the rows the
+increment matches, then the rewrite, which also counts the ledger's
+rows), and the datamart is one rollup job.
 """
 
 from __future__ import annotations

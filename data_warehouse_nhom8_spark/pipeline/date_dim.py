@@ -9,7 +9,7 @@ cluster, date parts as native expressions — no CSV to ship, any range.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -17,15 +17,16 @@ def build_date_dim(spark: SparkSession, start: str, end: str) -> DataFrame:
     """Materialize the 10-column warehouse date_dim for [start, end].
 
     date_sk is 1-based in sequence order — deterministic, matching the
-    reference's convention that the CSV row order defines the key.
+    reference's convention that the CSV row order defines the key. The
+    sequence yields consecutive days, so the key is the day offset from
+    `start` plus one: no global window, no single-partition sort.
     """
+    first = F.lit(start).cast("date")
     days = spark.range(1).select(
-        F.explode(
-            F.sequence(F.lit(start).cast("date"), F.lit(end).cast("date"))
-        ).alias("full_date")
+        F.explode(F.sequence(first, F.lit(end).cast("date"))).alias("full_date")
     )
     return days.select(
-        F.row_number().over(Window.orderBy("full_date")).cast("long").alias("date_sk"),
+        (F.datediff("full_date", first) + 1).cast("long").alias("date_sk"),
         "full_date",
         F.dayofmonth("full_date").alias("day_since_month_start"),
         F.date_format("full_date", "EEEE").alias("day_of_week_calendar"),

@@ -17,7 +17,9 @@ runs, not data, so the driver owns it:
   `.`/`_` names). File names carry a random suffix, so concurrent
   writers never collide. Nothing here starts a Spark job;
 * the skip-if-done gates (`is_done`, `runnable`) read the directory on
-  the driver with pyarrow;
+  the driver with pyarrow, each file once per `RunLedger`: committed
+  files never change, so a gate opens only the files new since the
+  last one;
 * the monitoring views and `latest_status` read it with Spark
   (`_read`), so files written by the older Spark appends and the
   pyarrow files read back as one table with the `RUN_LEDGER` schema;
@@ -49,6 +51,7 @@ class RunLedger:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._gate_rows: dict = {}  # file -> its (process, run_date, status) rows
 
     def _read(self) -> DataFrame:
         if not self._files():
@@ -103,7 +106,12 @@ class RunLedger:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        t = self._read_arrow(self._files(), ["process", "run_date", "status"])
+        cols = ["process", "run_date", "status"]
+        seen = self._gate_rows
+        self._gate_rows = {
+            f: seen[f] if f in seen else self._read_arrow([f], cols) for f in self._files()
+        }
+        t = pa.concat_tables([self._read_arrow([], cols), *self._gate_rows.values()])
         hit = pc.and_(
             pc.equal(t["run_date"], pa.scalar(run_date, pa.date32())),
             pc.equal(t["status"], "Success"),

@@ -11,19 +11,29 @@ observed counts into the ledger.
 
 A5 row-count side-outputs: the reference sums ROW_COUNT() after its
 UPDATE and INSERT branches into load_to_wh_log (load_to_wh.sh:97-103).
-The engine's twin is `merge_metrics`: per-branch counts (expired /
-inserted / carried) computed from the merged snapshot in ONE aggregate
-pass — no extra scan per metric.
+The engine counts the rows while it writes them: an `Observation` on
+the snapshot handed to `persist` carries `merge_metrics`' three sums
+(expired today / inserted today / live total), so the ledger's
+`rows_processed` costs no second pass over the new version. The sums
+run over the whole written snapshot, exactly as `merge_metrics` does
+over the committed one, so a rerun after a crash between the commit
+and the Success row reports what a fresh read would. `merge_metrics`
+stays the standalone twin, and the fallback when `persist` did not
+execute the snapshot it was handed.
 """
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from data_warehouse_nhom8_spark.operators.scd2 import CURRENT_SENTINEL, scd2_merge
+from data_warehouse_nhom8_spark.operators.scd2 import (
+    CURRENT_SENTINEL,
+    release_materialized,
+    scd2_merge,
+)
 from data_warehouse_nhom8_spark.pipeline.ledger import RunLedger
 
 SCD2_NATURAL_KEYS = ("job_title", "company_name")  # load_to_wh.sh:66-67
@@ -53,7 +63,10 @@ def load_day_to_warehouse(
     Success row is written: a Success row for a snapshot that never hit
     storage would make every rerun skip the day and lose the merge —
     the write must commit first, exactly as the reference's SQL commits
-    before its log UPDATE (load_to_wh.sh:97-103)."""
+    before its log UPDATE (load_to_wh.sh:97-103). `persist` writes the
+    DataFrame it is handed in one action (the ledger counts are
+    observed during that write) and returns a read of what it wrote:
+    the merge's materialized increment is freed when it returns."""
     day = datetime.date.fromisoformat(day) if isinstance(day, str) else day
     if ledger is not None and ledger.is_done(process, day):
         return warehouse
@@ -62,6 +75,7 @@ def load_day_to_warehouse(
     log_id = ledger.open_run(process, day) if ledger is not None else None
 
     inc = staging.filter(F.col("extracted_date") == F.lit(day))
+    held: list[DataFrame] = []
     snapshot = scd2_merge(
         current=warehouse,
         incoming=inc,
@@ -70,11 +84,20 @@ def load_day_to_warehouse(
         effective_date=day.isoformat(),
         null_safe=null_safe,
         keep_norm_keys=keep_norm_keys,
+        held=held,
     )
+    m = None
     if persist is not None:
-        snapshot = persist(snapshot)
+        obs = Observation()
+        try:
+            snapshot = persist(snapshot.observe(obs, *_metric_cols(day)))
+        finally:
+            # the returned snapshot is persist's read-back, which does
+            # not read the merge's materialized parts
+            release_materialized(held)
+        m = _observed(obs)
     if ledger is not None:
-        m = merge_metrics(snapshot, day)
+        m = m or merge_metrics(snapshot, day)
         ledger.close_run(
             log_id,
             process,
@@ -148,8 +171,12 @@ def warehouse_as_of(
 def merge_metrics(snapshot: DataFrame, day: datetime.date) -> dict[str, int]:
     """The ROW_COUNT() accounting (A5): how many rows this day's merge
     expired vs inserted, plus the live total — one aggregate pass."""
+    return _counts(snapshot.agg(*_metric_cols(day)).collect()[0])  # bounded-collect: one row
+
+
+def _metric_cols(day: datetime.date) -> list:
     sentinel = F.lit(CURRENT_SENTINEL).cast("date")
-    row = snapshot.agg(
+    return [
         F.sum(F.when(F.col("expired") == F.lit(day), 1).otherwise(0)).alias("expired_today"),
         F.sum(
             F.when(
@@ -157,5 +184,19 @@ def merge_metrics(snapshot: DataFrame, day: datetime.date) -> dict[str, int]:
             ).otherwise(0)
         ).alias("inserted_today"),
         F.sum(F.when(F.col("expired") == sentinel, 1).otherwise(0)).alias("live_total"),
-    ).collect()[0]
+    ]
+
+
+def _counts(row) -> dict[str, int]:
     return {k: int(row[k] or 0) for k in ("expired_today", "inserted_today", "live_total")}
+
+
+def _observed(obs: Observation) -> dict[str, int] | None:
+    """`obs`'s counts, or None when Spark reported none: no action ran
+    the observed plan (`Observation.get` would then wait forever; Spark
+    completes an observation before the action that ran it returns),
+    or adaptive execution replaced the observed operator with an empty
+    relation (an empty result)."""
+    if not obs._jo.future().isCompleted() or obs._jo.getRow().length() == 0:
+        return None
+    return _counts(obs.get)

@@ -145,6 +145,48 @@ def test_ledger_same_instant_appends_never_share_a_file(spark, tmp_path, monkeyp
     assert sorted(r["process"] for r in b._read().collect()) == ["a", "a", "b"]
 
 
+def _counting_opens(monkeypatch) -> list:
+    """The list of parquet files opened with pyarrow from now on."""
+    import pyarrow.parquet as pq
+
+    opened, real = [], pq.ParquetFile
+
+    def counting(f, *a, **k):
+        opened.append(f)
+        return real(f, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    return opened
+
+
+def test_ledger_gates_open_only_files_new_since_the_last_gate(spark, tmp_path, monkeypatch):
+    led = RunLedger(spark, str(tmp_path / "ledger"))
+    opened = _counting_opens(monkeypatch)
+    led.close_run(led.open_run("a", D1), "a", D1, "Success")
+    assert led.is_done("a", D1) and not led.is_done("b", D1)
+    assert len(opened) == 2
+    # a second writer (another process) appends; the gate reads only its files
+    other = RunLedger(spark, str(tmp_path / "ledger"))
+    other.close_run(other.open_run("b", D1), "b", D1, "Success")
+    assert led.is_done("b", D1) and led.is_done("a", D1)
+    assert len(opened) == 4 and len(set(opened)) == 4
+
+
+def test_ledger_gates_after_a_prune(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "ledger")
+    led = RunLedger(spark, path)
+    for d in (D1, D2):
+        led.close_run(led.open_run("p", d), "p", d, "Success")
+    assert led.is_done("p", D1) and led.is_done("p", D2)
+    RunLedger(spark, path).prune(keep_days=0, today=D2)  # another process prunes
+    opened = _counting_opens(monkeypatch)
+    assert not led.is_done("p", D1) and led.is_done("p", D2)
+    assert opened == led._files()  # the compacted file, once; removed files forgotten
+    assert list(led._gate_rows) == led._files()
+    led.prune(keep_days=0, today=D2 + datetime.timedelta(days=1))
+    assert not led.is_done("p", D2) and len(led._gate_rows) == 1
+
+
 def test_extract_filter_matches_spark_predicate(spark):
     """The driver-side validity filter keeps exactly the values Spark's
     `isNotNull() & trim(c) != ''` keeps (Spark's trim strips only the
@@ -229,7 +271,7 @@ def test_datamart_rebuild_failure_keeps_previous_tables(spark, tmp_path, monkeyp
 
 # Spark jobs of one steady ~200-listing day through run_daily_pipeline
 # on the shared session. It only ratchets down.
-STEADY_DAY_JOB_BUDGET = 28
+STEADY_DAY_JOB_BUDGET = 26
 
 
 def _listings(day: datetime.date, ids: range, version: int) -> dict:
@@ -275,3 +317,127 @@ def test_daily_steady_day_spark_job_budget(spark, tmp_path):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     print(f"steady day: {jobs} Spark jobs")
     assert 0 < jobs <= STEADY_DAY_JOB_BUDGET
+
+
+# ------------------------------------------------- the daily SCD2 merge
+
+WH_COLS = (
+    "job_id string, job_title string, company_name string, salary string, "
+    "location string, experience_required string, posted_time string, "
+    "job_url string, extracted_date date"
+)
+
+
+def _staging_rows(day: datetime.date, ids, salary: str) -> list[tuple]:
+    return [(f"j{day.day}-{i}", f"Dev {i}", "ACME", salary, "HN", "2y", "t", f"u{i}", day)
+            for i in ids]
+
+
+def _warehouse_day1(spark, tmp_path):
+    """A committed staging snapshot holding day 1 (keys 0-5) and day 2
+    (keys 0-1 unchanged, 2-3 with a changed salary, 6-7 new), and a
+    bucketed warehouse loaded with day 1. Returns (load, staging path,
+    warehouse path): `load` runs one day through
+    `load_day_to_warehouse` and returns (the read-back, the DataFrame
+    written)."""
+    from data_warehouse_nhom8_spark.pipeline.warehouse_load import load_day_to_warehouse
+    from data_warehouse_nhom8_spark.sources.snapshots import snapshot_overwrite, snapshot_read
+
+    stg_path, wh_path = str(tmp_path / "staging"), str(tmp_path / "warehouse")
+    rows = (_staging_rows(D1, range(6), "10tr") + _staging_rows(D2, range(2), "10tr")
+            + _staging_rows(D2, range(2, 4), "12tr") + _staging_rows(D2, range(6, 8), "9tr"))
+    snapshot_overwrite(spark.createDataFrame(rows, WH_COLS), stg_path)
+    staging = snapshot_read(spark, stg_path)
+    written = []
+
+    def persist(snapshot):
+        written.append(snapshot)
+        snapshot_overwrite(
+            snapshot, wh_path,
+            bucket_by=None if os.path.exists(wh_path) else ["__nk_job_title", "__nk_company_name"],
+            n_buckets=4,
+        )
+        return snapshot_read(spark, wh_path)
+
+    def load(day, ledger=None):
+        wh = snapshot_read(spark, wh_path)
+        out = load_day_to_warehouse(staging, wh, day, ledger=ledger, persist=persist,
+                                    keep_norm_keys=True)
+        return out, written[-1]
+
+    load(D1)
+    return load, stg_path, wh_path
+
+
+def test_steady_merge_scans_the_warehouse_once_and_staging_never(spark, tmp_path):
+    from data_warehouse_nhom8_spark.plans.doctor import _iter_plan_nodes
+
+    load, stg_path, wh_path = _warehouse_day1(spark, tmp_path)
+    _wh, written = load(D2)
+    roots = [
+        node.relation().location().rootPaths().toString()
+        for node in _iter_plan_nodes(written._jdf.queryExecution().executedPlan())
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert sum(wh_path in r for r in roots) == 1, roots
+    assert sum(stg_path in r for r in roots) == 0, roots
+
+
+def test_observed_ledger_counts_equal_merge_metrics_and_on_a_crash_rerun(
+    spark, tmp_path, monkeypatch
+):
+    from data_warehouse_nhom8_spark.pipeline import warehouse_load as wl
+
+    load, _stg, _wh = _warehouse_day1(spark, tmp_path)
+    observed, real, merge_metrics = [], wl._observed, wl.merge_metrics
+
+    def recording(obs):
+        observed.append(real(obs))
+        return observed[-1]
+
+    monkeypatch.setattr(wl, "_observed", recording)
+    monkeypatch.setattr(wl, "merge_metrics", lambda *a: pytest.fail("counted in a second pass"))
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+
+    # crash-rerun: the day-2 snapshot committed, its Success row never written
+    wh, _ = load(D2)
+    first = merge_metrics(wh, D2)
+    assert first == {"expired_today": 2, "inserted_today": 4, "live_total": 8}
+    rerun, _ = load(D2, ledger)
+    want = merge_metrics(rerun, D2)
+    assert observed == [first, want] and want == first
+    assert sorted(map(tuple, rerun.collect())) == sorted(map(tuple, wh.collect()))
+    [done] = [r for r in ledger._read().collect() if r["status"] == "Success"]
+    assert done["rows_processed"] == want["expired_today"] + want["inserted_today"]
+
+
+def test_merge_releases_its_materialized_increment(spark, tmp_path):
+    def persisted() -> int:
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persisted()
+    load, _stg, _wh = _warehouse_day1(spark, tmp_path)
+    one_day = persisted()
+    load(D2)
+    assert persisted() <= one_day <= before
+
+
+def test_observed_counts_are_none_when_spark_reports_none(spark):
+    """The ledger then falls back to `merge_metrics`: for an observation
+    no action ran, and for one adaptive execution dropped (the observed
+    rows all filtered out upstream of a shuffle that came back empty)."""
+    from pyspark.sql import Observation, Window
+
+    from data_warehouse_nhom8_spark.pipeline.warehouse_load import _metric_cols, _observed
+
+    unrun = Observation()
+    spark.range(3).observe(unrun, F.count(F.lit(1)).alias("n"))
+    assert _observed(unrun) is None
+    dropped = Observation()
+    rows = spark.createDataFrame([(D1, D1)], "expired date, extracted_date date")
+    out = (
+        rows.observe(dropped, *_metric_cols(D1))
+        .filter("expired > extracted_date")
+        .withColumn("r", F.row_number().over(Window.partitionBy("expired").orderBy("extracted_date")))
+    )
+    assert out.collect() == [] and _observed(dropped) is None

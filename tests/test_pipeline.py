@@ -78,6 +78,27 @@ def test_staging_transform_golden(spark, raw_dir):
     assert t1["date_id"] == 10
 
 
+@pytest.mark.parametrize(
+    "start,end", [("2024-02-27", "2024-03-02"), ("2025-03-10", "2025-03-10")]
+)
+def test_date_dim_sk_equals_row_number_form(spark, start, end):
+    """date_sk (day offset + 1) is the 1-based row number of the
+    sequence, across 29 February and for a one-day range."""
+    from pyspark.sql import Window
+
+    dim = build_date_dim(spark, start, end)
+    ranked = dim.select(
+        "full_date",
+        "date_sk",
+        F.row_number().over(Window.orderBy("full_date")).cast("long").alias("rn"),
+    ).collect()
+    ranked.sort(key=lambda r: r["full_date"])
+    assert [r["date_sk"] for r in ranked] == [r["rn"] for r in ranked]
+    assert ranked[0]["date_sk"] == 1 and ranked[0]["full_date"].isoformat() == start
+    assert ranked[-1]["full_date"].isoformat() == end
+    assert dim.schema["date_sk"].dataType.simpleString() == "bigint"
+
+
 def test_staging_upsert_rerun_identical(spark, raw_dir):
     raw = read_partitioned_csv(spark, raw_dir, schemas.RAW_JOBS_CSV)
     dim = build_date_dim(spark, "2025-03-01", "2025-03-31")

@@ -105,18 +105,22 @@ def test_compaction_merges_small_files(spark, tmp_path):
 
 
 def test_no_driver_collect_in_data_snapshot_paths():
-    """Gate: the daily pipeline and the streaming sink must never
+    """Gate: the daily pipeline (and the staging, warehouse-load and
+    SCD2 modules it runs) and the streaming sink must never
     materialize a data table on the driver (round-1 verdict #2).
     safe_overwrite (driver collect) is control-plane-only (ledger).
     A `# bounded-collect:` pragma exempts a line that collects a
     PROVABLY bounded control-plane set (e.g. the partitioned merge's
     K distinct partition values) — the pragma forces the exemption to
     be visible and greppable at the site, never implicit."""
+    import data_warehouse_nhom8_spark.operators.scd2 as scd2
     import data_warehouse_nhom8_spark.pipeline.daily as daily
+    import data_warehouse_nhom8_spark.pipeline.staging as staging
+    import data_warehouse_nhom8_spark.pipeline.warehouse_load as warehouse_load
     import data_warehouse_nhom8_spark.streaming.jobs as sjobs
     import inspect
 
-    for mod in (daily, sjobs):
+    for mod in (daily, staging, warehouse_load, scd2, sjobs):
         src = inspect.getsource(mod)
         assert "safe_overwrite" not in src, mod.__name__
         for ln in src.splitlines():
